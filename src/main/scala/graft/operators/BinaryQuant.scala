@@ -100,30 +100,11 @@ object BinaryQuant {
 
   /** Admin-cadence promotion: fold committed batch dirs back into the
     * base words table and retire them — the serve plan returns to one
-    * scan. Crash-idempotent staged publish (the
-    * [[ScalarQuant.promoteBatches]] pattern verbatim).
+    * scan ([[IndexTable.promote]]).
     */
-  def promoteBatches(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs = new Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__promote_ready")
-    if (!fs.exists(path("words_batches")) && !fs.exists(ready)) return
-    if (!fs.exists(ready)) {
-      readWords(s, indexDir)
-        .write.mode("overwrite").parquet(s"$indexDir/__promote_tmp/words")
-      fs.create(ready, true).close()
-    }
-    val tmp = path("__promote_tmp/words")
-    if (fs.exists(tmp)) {
-      fs.delete(path("words"), true)
-      fs.rename(tmp, path("words"))
-    }
-    fs.delete(path("words_batches"), true)
-    fs.delete(path("__promote_tmp"), true)
-    fs.delete(ready, false)
-  }
+  def promoteBatches(s: SparkSession, indexDir: String): Unit =
+    IndexTable.promote(s, indexDir, Seq("words"))(at =>
+      readWords(s, indexDir).write.mode("overwrite").parquet(at("words")))
 
   /** Logical delete (the GDPR-erasure path — [[ScalarQuant.sqDeleteIds]]
     * one tier colder): tombstoned vec_ids are anti-joined out of every
@@ -135,48 +116,17 @@ object BinaryQuant {
 
   /** Admin-cadence delete close-out: rewrite the base words table
     * without tombstoned rows (committed batches fold in — [[readWords]]
-    * defines the live row set), retire batch dirs and tombstones.
-    * Staged publish, crash-idempotent ([[ScalarQuant.compactDeletes]]).
+    * defines the live row set), retire batch dirs and tombstones
+    * ([[IndexTable.compact]]).
     */
-  def compactDeletes(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs = new Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__compact_ready")
-    if (Tombstones.read(s, indexDir).isEmpty && !fs.exists(ready)) return
-    if (!fs.exists(ready)) {
-      readWords(s, indexDir)
-        .write.mode("overwrite").parquet(s"$indexDir/__compact_tmp/words")
-      fs.create(ready, true).close()
-    }
-    val tmp = path("__compact_tmp/words")
-    if (fs.exists(tmp)) {
-      fs.delete(path("words"), true)
-      fs.rename(tmp, path("words"))
-    }
-    fs.delete(path("words_batches"), true)
-    Tombstones.clear(s, indexDir)
-    fs.delete(path("__compact_tmp"), true)
-    fs.delete(ready, false)
-  }
+  def compactDeletes(s: SparkSession, indexDir: String): Unit =
+    IndexTable.compact(s, indexDir, Seq("words"))(at =>
+      readWords(s, indexDir).write.mode("overwrite").parquet(at("words")))
 
-  /** Base words ∪ committed append batches (absent side dirs → base
-    * alone — the one-scan plan), minus any tombstoned rows
-    * (erasure-request-sized ⇒ broadcast anti-join; absent → no-op).
-    */
-  private def readWords(s: SparkSession, indexDir: String): DataFrame = {
-    val base = s.read.parquet(s"$indexDir/words")
-    val bp = new org.apache.hadoop.fs.Path(s"$indexDir/words_batches")
-    val fs = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val all =
-      if (fs.exists(bp))
-        base.unionByName(s.read.parquet(bp.toString).drop("batch"))
-      else base
-    Tombstones.read(s, indexDir).map(t =>
-      all.join(broadcast(t.select(col("vec_id"))),
-        Seq("vec_id"), "left_anti")).getOrElse(all)
-  }
+  /** The live words: base ∪ committed append batches − tombstoned
+    * vec_ids ([[IndexTable.live]]). */
+  private def readWords(s: SparkSession, indexDir: String): DataFrame =
+    IndexTable.live(s, indexDir, "words", "vec_id")
 
   /** Bit audit: the persisted packed words exploded back to
     * (vec_id, dim, bit) rows — 1-based dim, unpacked with `getbit`.

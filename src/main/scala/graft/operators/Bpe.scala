@@ -82,14 +82,18 @@ object Bpe {
     * count, not hope: the ceiling bounds driver memory at ~tens of MB.
     * Override with spark.graft.bpe.localTrainMaxTypes (set 0 to force
     * the distributed rounds — the A/B and BpeSpec's distributed-path
-    * coverage use this).
+    * coverage use this). The default applies only while the key is
+    * unset; a value that is not an integer is a configuration error,
+    * never a silent fallback.
     */
   private val LocalTrainMaxTypesDefault = 262144L
 
-  private[operators] def localTrainMaxTypes(s: SparkSession): Long =
-    scala.util.Try(
-      s.conf.get("spark.graft.bpe.localTrainMaxTypes").toLong)
-      .getOrElse(LocalTrainMaxTypesDefault)
+  private[operators] def localTrainMaxTypes(s: SparkSession): Long = {
+    val key = "spark.graft.bpe.localTrainMaxTypes"
+    s.conf.getOption(key).fold(LocalTrainMaxTypesDefault)(v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be an integer count of word types, got '$v'")))
+  }
 
   /** Spark's string ordering is UTF8String.compareTo — unsigned
     * lexicographic comparison of the UTF-8 bytes. The local argmax

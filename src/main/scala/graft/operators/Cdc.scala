@@ -101,11 +101,10 @@ object Cdc {
     val base = s.read.parquet(s"$lakeDir/base")
       .select(col("key"), col("value"), col("disposition"),
         lit(-1L).as("batch"))
-    val p = new org.apache.hadoop.fs.Path(s"$lakeDir/changes_batches")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val changes = s"$lakeDir/changes_batches"
     val all =
-      if (fs.exists(p))
-        base.unionByName(s.read.parquet(p.toString)
+      if (IndexTable.exists(s, changes))
+        base.unionByName(s.read.parquet(changes)
           .filter(col("batch").cast("long") <= asOfBatch)
           .select(col("key"), col("value"),
             lit(null).cast("string").as("disposition"),
@@ -127,34 +126,18 @@ object Cdc {
           .otherwise("updated").as("disposition"))
   }
 
-  /** Fold committed batches into base at admin cadence — the staged
-    * ready-marker publish every index lake here uses: idempotent under
-    * crash/re-run, batch dirs retired only after the swap. The folded
-    * base keeps each key's disposition, so the promoted snapshot
-    * answers exactly what the pre-promotion snapshot did.
+  /** Fold committed batches into base at admin cadence
+    * ([[IndexTable.promote]]; batch dirs retire only after the swap).
+    * The folded base keeps each key's disposition, so the promoted
+    * snapshot answers exactly what the pre-promotion snapshot did.
     */
-  def promoteBatches(s: SparkSession, lakeDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$lakeDir/$p")
-    val fs = path("base").getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__promote_ready")
-    if (!fs.exists(path("changes_batches")) && !fs.exists(ready)) return
-    if (!fs.exists(ready)) {
+  def promoteBatches(s: SparkSession, lakeDir: String): Unit =
+    IndexTable.promote(s, lakeDir, Seq("base"),
+        batches = Seq("changes_batches"))(at =>
       snapshot(s, lakeDir)
         .select(col("key"), col("acctbal").as("value"),
           col("disposition"))
-        .write.mode("overwrite").parquet(s"$lakeDir/__promote_tmp/base")
-      fs.create(ready, true).close()
-    }
-    val tmp = path("__promote_tmp/base")
-    if (fs.exists(tmp)) {
-      fs.delete(path("base"), true)
-      fs.rename(tmp, path("base"))
-    }
-    fs.delete(path("changes_batches"), true)
-    fs.delete(path("__promote_tmp"), true)
-    fs.delete(ready, false)
-  }
+        .write.mode("overwrite").parquet(at("base")))
 
   /** Build the driver lake: customer base + the purchase changelog
     * landed as two time-ordered batches split at the timestamp

@@ -914,19 +914,8 @@ object Dedup {
     */
   def noveltyFromIndex(s: SparkSession, indexDir: String,
       docs: DataFrame, hotDocs: Int = 1024): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val base = s.read.parquet(s"$indexDir/firstseen")
-    val bPath = new Path(s"$indexDir/firstseen_batches")
-    val fs = bPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val union =
-      if (fs.exists(bPath))
-        base.unionByName(
-          s.read.parquet(bPath.toString).drop("batch"))
-      else base
     // checkpointed for the same two-consumer reason novelty() notes
-    val firstSeen0 = lazyCheckpoint(union.groupBy(col("g"))
-      .agg(min(col("first_doc")).as("first_doc"),
-        sum(col("df")).as("df")))
+    val firstSeen0 = lazyCheckpoint(foldedFirstSeen(s, indexDir))
     // same materialize-arrays-then-explode shape as novelty() — the
     // probe frame forks into noveltyScores' hot/cold legs (and, with
     // deletions pending, the affected-gram re-derivation)
@@ -995,27 +984,13 @@ object Dedup {
     * index-locally (min survives ⇒ min is the survivors'; df
     * subtracts the tombstoned carriers). The rewritten base equals a
     * survivors-only [[noveltyWriteIndex]] build row-for-row
-    * (spec-pinned). Staged publish + ready marker, crash-idempotent.
+    * (spec-pinned). Staged publish: [[IndexTable.compact]].
     */
   def compactNoveltyDeletes(s: SparkSession, indexDir: String,
-      survivorDocs: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs =
-      new Path(indexDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__compact_firstseen_ready")
-    val tombOpt = Tombstones.read(s, indexDir)
-    if (tombOpt.isEmpty && !fs.exists(ready)) return
-    val tmp = path("__compact_firstseen_tmp")
-    if (!fs.exists(ready)) {
-      val t = tombOpt.get
-      val bPath = path("firstseen_batches")
-      val base = s.read.parquet(path("firstseen").toString)
-      val folded = (if (fs.exists(bPath))
-          base.unionByName(s.read.parquet(bPath.toString).drop("batch"))
-        else base)
-        .groupBy(col("g")).agg(min(col("first_doc")).as("first_doc"),
-          sum(col("df")).as("df"))
+      survivorDocs: DataFrame): Unit =
+    IndexTable.compact(s, indexDir, Seq("firstseen")) { at =>
+      val t = Tombstones.read(s, indexDir).get
+      val folded = foldedFirstSeen(s, indexDir)
       val tdocs = broadcast(t.select(col("doc_id")).distinct()
         .withColumnRenamed("doc_id", "first_doc"))
       val dfDel = broadcast(t.dropDuplicates("doc_id", "g")
@@ -1035,51 +1010,25 @@ object Dedup {
         .groupBy(col("g")).agg(min(col("doc_id")).as("first_doc"),
           count(lit(1)).as("df"))
       kept.unionByName(reDerived)
-        .write.mode("overwrite").parquet(tmp.toString)
-      fs.create(ready, true).close()
+        .write.mode("overwrite").parquet(at("firstseen"))
     }
-    if (fs.exists(tmp)) {
-      fs.delete(path("firstseen"), true)
-      fs.rename(tmp, path("firstseen"))
-    }
-    fs.delete(path("firstseen_batches"), true)
-    Tombstones.clear(s, indexDir)
-    fs.delete(ready, false)
-  }
 
-  /** Fold committed novelty append batches back into the base index —
-    * [[Similarity.promoteBatches]]' staged-publish pattern with the
-    * one twist this index needs: the merge MIN-FOLDS rows sharing a
-    * gram hash (base and batches can both know a gram) instead of
-    * concatenating. Crash-idempotent: the merged table lands in a
-    * side dir, a ready marker publishes it, the swap and batch-dir
-    * retirement follow; a re-run that sees the marker skips the merge,
-    * and a completed promotion re-runs as a no-op.
+  /** Fold committed novelty append batches back into the base index,
+    * MIN-FOLDING rows that share a gram hash (base and batches can both
+    * know a gram) instead of concatenating ([[IndexTable.promote]]).
     */
-  def promoteNoveltyBatches(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs =
-      new Path(indexDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batches = path("firstseen_batches")
-    val ready = path("__promote_firstseen_ready")
-    val tmp = path("__promote_firstseen_tmp")
-    if (!fs.exists(batches) && !fs.exists(ready)) return
-    if (!fs.exists(ready)) {
-      s.read.parquet(path("firstseen").toString)
-        .unionByName(s.read.parquet(batches.toString).drop("batch"))
-        .groupBy(col("g")).agg(min(col("first_doc")).as("first_doc"),
-          sum(col("df")).as("df"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      fs.create(ready, true).close()
-    }
-    if (fs.exists(tmp)) {
-      fs.delete(path("firstseen"), true)
-      fs.rename(tmp, path("firstseen"))
-    }
-    fs.delete(batches, true)
-    fs.delete(ready, false)
-  }
+  def promoteNoveltyBatches(s: SparkSession, indexDir: String): Unit =
+    IndexTable.promote(s, indexDir, Seq("firstseen"))(at =>
+      foldedFirstSeen(s, indexDir)
+        .write.mode("overwrite").parquet(at("firstseen")))
+
+  /** Base ∪ batches min-folded per gram: the earliest doc and the
+    * summed df. */
+  private def foldedFirstSeen(s: SparkSession,
+      indexDir: String): DataFrame =
+    IndexTable.union(s, indexDir, "firstseen")
+      .groupBy(col("g")).agg(min(col("first_doc")).as("first_doc"),
+        sum(col("df")).as("df"))
 
   /** Duplicate clusters over the corpus: minhash near-dup pairs →
     * connected components → one row per cluster with its canonical id
@@ -1142,49 +1091,17 @@ object Dedup {
 
   /** Admin-cadence delete close-out: rewrite the base buckets without
     * the tombstoned docs (append batches fold in), retire batch dirs
-    * and tombstones — staged publish with a ready marker
-    * ([[ScalarQuant.compactDeletes]]'s order, crash-idempotent).
+    * and tombstones ([[IndexTable.compact]]).
     */
-  def compactBucketDeletes(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs = new Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__compact_ready")
-    if (Tombstones.read(s, indexDir).isEmpty && !fs.exists(ready)) return
-    if (!fs.exists(ready)) {
+  def compactBucketDeletes(s: SparkSession, indexDir: String): Unit =
+    IndexTable.compact(s, indexDir, Seq("buckets"))(at =>
       readBuckets(s, indexDir)
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/__compact_tmp/buckets")
-      fs.create(ready, true).close()
-    }
-    val tmp = path("__compact_tmp/buckets")
-    if (fs.exists(tmp)) {
-      fs.delete(path("buckets"), true)
-      fs.rename(tmp, path("buckets"))
-    }
-    fs.delete(path("buckets_batches"), true)
-    Tombstones.clear(s, indexDir)
-    fs.delete(path("__compact_tmp"), true)
-    fs.delete(ready, false)
-  }
+        .write.mode("overwrite").parquet(at("buckets")))
 
-  /** Base buckets ∪ committed append batches (absent side dirs → base
-    * alone — the [[ScalarQuant]] readCodes convention), minus any
-    * tombstoned docs' rows (erasure-request-sized ⇒ broadcast
-    * anti-join; absent → no-op). */
-  private def readBuckets(s: SparkSession, indexDir: String): DataFrame = {
-    val base = s.read.parquet(s"$indexDir/buckets")
-    val bp = new org.apache.hadoop.fs.Path(s"$indexDir/buckets_batches")
-    val fs = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val all =
-      if (fs.exists(bp))
-        base.unionByName(s.read.parquet(bp.toString).drop("batch"))
-      else base
-    Tombstones.read(s, indexDir).map(t =>
-      all.join(broadcast(t.select(col("doc_id"))),
-        Seq("doc_id"), "left_anti")).getOrElse(all)
-  }
+  /** The live buckets: base ∪ committed append batches − tombstoned
+    * docs' rows ([[IndexTable.live]]). */
+  private def readBuckets(s: SparkSession, indexDir: String): DataFrame =
+    IndexTable.live(s, indexDir, "buckets", "doc_id")
 
   /** [[minhashPairs]] SERVED from a persisted full-corpus bucket index
     * ([[minhashWriteIndex]], any lifecycle state): the candidate stage

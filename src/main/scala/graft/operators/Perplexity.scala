@@ -193,24 +193,13 @@ object Perplexity {
     * streaming-fed model may have batches and no base yet; only BOTH
     * missing is an error.
     */
-  private def foldedRaw(s: SparkSession, modelDir: String): DataFrame = {
-    def existing(p: String): Option[DataFrame] = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(hp)) Some(
-        s.read.option("basePath", p).parquet(p)) else None
-    }
-    val base = existing(s"$modelDir/bigrams")
-    val batches = existing(s"$modelDir/bigrams_batches")
-      .map(_.drop("batch"))
-    (base, batches) match {
-      case (Some(b), Some(x)) => b.unionByName(x)
-      case (Some(b), None)    => b
-      case (None, Some(x))    => x
-      case (None, None) => sys.error(
-        s"no perplexity model at $modelDir (neither base nor batches)")
-    }
-  }
+  private def foldedRaw(s: SparkSession, modelDir: String): DataFrame =
+    if (IndexTable.exists(s, s"$modelDir/bigrams"))
+      IndexTable.union(s, modelDir, "bigrams")
+    else if (IndexTable.exists(s, s"$modelDir/bigrams_batches"))
+      IndexTable.batches(s, modelDir, "bigrams")
+    else sys.error(
+      s"no perplexity model at $modelDir (neither base nor batches)")
 
   /** Batches folded into summed counts, tombstones NOT applied —
     * (w1, w2, c2, tw) with the carried-forward watermark. What
@@ -258,64 +247,27 @@ object Perplexity {
     * under the watermark guard) with the watermark ADVANCED past every
     * folded delete batch, then retire batch dirs and tombstones — the
     * serve returns to the minimal no-subtraction plan, and the window
-    * between the swap and the retire is inert by the watermark. Staged
-    * publish + ready marker, crash-idempotent.
+    * between the swap and the retire is inert by the watermark
+    * ([[IndexTable.compact]]).
     */
-  def compactDeletes(s: SparkSession, modelDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$modelDir/$p")
-    val fs = new Path(modelDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__compact_ready")
-    val tombOpt = Tombstones.readRaw(s, modelDir)
-    if (tombOpt.isEmpty && !fs.exists(ready)) return
-    val tmp = path("__compact_tmp/bigrams")
-    if (!fs.exists(ready)) {
+  def compactDeletes(s: SparkSession, modelDir: String): Unit =
+    IndexTable.compact(s, modelDir, Seq("bigrams")) { at =>
       val twNew = foldedRaw(s, modelDir).agg(max(col("tw")).as("otw"))
-        .crossJoin(broadcast(
-          tombOpt.get.agg(max(col("batch")).cast("long").as("mb"))))
+        .crossJoin(broadcast(Tombstones.readRaw(s, modelDir).get
+          .agg(max(col("batch")).cast("long").as("mb"))))
         .select(greatest(col("otw"),
           coalesce(col("mb"), col("otw"))).as("tw"))
       foldedCounts(s, modelDir)
         .crossJoin(broadcast(twNew))
-        .write.mode("overwrite").parquet(tmp.toString)
-      fs.create(ready, true).close()
+        .write.mode("overwrite").parquet(at("bigrams"))
     }
-    if (fs.exists(tmp)) {
-      fs.delete(path("bigrams"), true)
-      fs.rename(tmp, path("bigrams"))
-    }
-    fs.delete(path("bigrams_batches"), true)
-    Tombstones.clear(s, modelDir)
-    fs.delete(path("__compact_tmp"), true)
-    fs.delete(ready, false)
-  }
 
   /** Admin-cadence promotion: fold committed batches into the base
-    * table and retire the batch dirs (staged publish + ready marker,
-    * crash-idempotent in the [[Search.promoteBatches]] style).
+    * table and retire the batch dirs ([[IndexTable.promote]]).
     */
-  def promoteBatches(s: SparkSession, modelDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$modelDir/$p")
-    val fs = new Path(modelDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__promote_ready")
-    if (!fs.exists(path("bigrams_batches")) && !fs.exists(ready)) return
-    if (!fs.exists(ready)) {
-      foldedBase(s, modelDir).write.mode("overwrite")
-        .parquet(s"$modelDir/__promote_tmp/bigrams")
-      fs.create(ready, true).close()
-    }
-    val tmp = path("__promote_tmp/bigrams")
-    if (fs.exists(tmp)) {
-      fs.delete(path("bigrams"), true)
-      fs.rename(tmp, path("bigrams"))
-    }
-    fs.delete(path("bigrams_batches"), true)
-    fs.delete(path("__promote_tmp"), true)
-    fs.delete(ready, false)
-  }
+  def promoteBatches(s: SparkSession, modelDir: String): Unit =
+    IndexTable.promote(s, modelDir, Seq("bigrams"))(at =>
+      foldedBase(s, modelDir).write.mode("overwrite").parquet(at("bigrams")))
 
   /** LM-count fsck — [[Search.indexTermStats]]'s counterpart for the
     * count model: the LIVE bigram counts (base ∪ batches summed, any

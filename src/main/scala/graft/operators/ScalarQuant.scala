@@ -84,32 +84,11 @@ object ScalarQuant {
 
   /** Admin-cadence promotion: fold committed batch dirs back into the
     * base codes table and retire them — the serve plan returns to one
-    * scan, no union. Crash-idempotent staged publish (the
-    * [[Search.promoteBatches]] pattern): merge into a side dir, ready
-    * marker, swap, retire; a re-run that sees the marker skips the
-    * merge, so nothing double-counts.
+    * scan, no union ([[IndexTable.promote]]).
     */
-  def promoteBatches(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs = new Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__promote_ready")
-    if (!fs.exists(path("codes_batches")) && !fs.exists(ready)) return
-    if (!fs.exists(ready)) {
-      readCodes(s, indexDir)
-        .write.mode("overwrite").parquet(s"$indexDir/__promote_tmp/codes")
-      fs.create(ready, true).close()
-    }
-    val tmp = path("__promote_tmp/codes")
-    if (fs.exists(tmp)) {
-      fs.delete(path("codes"), true)
-      fs.rename(tmp, path("codes"))
-    }
-    fs.delete(path("codes_batches"), true)
-    fs.delete(path("__promote_tmp"), true)
-    fs.delete(ready, false)
-  }
+  def promoteBatches(s: SparkSession, indexDir: String): Unit =
+    IndexTable.promote(s, indexDir, Seq("codes"))(at =>
+      readCodes(s, indexDir).write.mode("overwrite").parquet(at("codes")))
 
   /** Logical delete (the GDPR-erasure path): the vec_ids land in a
     * tombstone batch; every serve anti-joins them out until
@@ -125,50 +104,17 @@ object ScalarQuant {
     * codes table without the tombstoned rows (committed append batches
     * fold in too — [[readCodes]] is the single definition of the live
     * row set), then retire batch dirs and tombstones — the serve
-    * returns to the minimal one-scan, no-anti-join plan. Same staged
-    * publish as [[promoteBatches]]: merged table, ready marker, swap,
-    * retire; crash-idempotent at every step.
+    * returns to the minimal one-scan, no-anti-join plan
+    * ([[IndexTable.compact]]).
     */
-  def compactDeletes(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs = new Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__compact_ready")
-    if (Tombstones.read(s, indexDir).isEmpty && !fs.exists(ready)) return
-    if (!fs.exists(ready)) {
-      readCodes(s, indexDir)
-        .write.mode("overwrite").parquet(s"$indexDir/__compact_tmp/codes")
-      fs.create(ready, true).close()
-    }
-    val tmp = path("__compact_tmp/codes")
-    if (fs.exists(tmp)) {
-      fs.delete(path("codes"), true)
-      fs.rename(tmp, path("codes"))
-    }
-    fs.delete(path("codes_batches"), true)
-    Tombstones.clear(s, indexDir)
-    fs.delete(path("__compact_tmp"), true)
-    fs.delete(ready, false)
-  }
+  def compactDeletes(s: SparkSession, indexDir: String): Unit =
+    IndexTable.compact(s, indexDir, Seq("codes"))(at =>
+      readCodes(s, indexDir).write.mode("overwrite").parquet(at("codes")))
 
-  /** Base codes ∪ committed append batches (when any exist — an
-    * ungrown or freshly promoted index serves with the minimal
-    * one-scan plan), minus any tombstoned rows (erasure-request-sized,
-    * so the anti-join broadcasts; no tombstones → no anti-join).
-    */
-  private def readCodes(s: SparkSession, indexDir: String): DataFrame = {
-    val base = s.read.parquet(s"$indexDir/codes")
-    val bp = new org.apache.hadoop.fs.Path(s"$indexDir/codes_batches")
-    val fs = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val all =
-      if (fs.exists(bp))
-        base.unionByName(s.read.parquet(bp.toString).drop("batch"))
-      else base
-    Tombstones.read(s, indexDir).map(t =>
-      all.join(broadcast(t.select(col("vec_id"))),
-        Seq("vec_id"), "left_anti")).getOrElse(all)
-  }
+  /** The live codes: base ∪ committed append batches − tombstoned
+    * vec_ids ([[IndexTable.live]]). */
+  private def readCodes(s: SparkSession, indexDir: String): DataFrame =
+    IndexTable.live(s, indexDir, "codes", "vec_id")
 
   /** Decode audit: the persisted codes exploded back to
     * (vec_id, dim, code) rows — 1-based dim to match SQL lambda

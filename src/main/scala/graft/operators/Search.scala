@@ -142,70 +142,28 @@ object Search {
     * batch dirs — the grown index returns to the minimal serve plan
     * (no sum-fold exchanges, one postings scan). This is the rare,
     * corpus-sized rewrite; [[appendBatch]] + compaction remain the
-    * per-arrival path. Crash-idempotent in the staged-publish style:
-    * all three merged tables land in a side dir first, a ready marker
-    * publishes them, and only then are base tables swapped and batch
-    * dirs retired — a crash at any point re-runs to completion without
-    * double-counting (the merge always reads the UNSWAPPED base, since
-    * swaps begin only after the marker exists, and a re-run that sees
-    * the marker skips the merge entirely).
+    * per-arrival path. Staged publish: [[IndexTable.promote]].
     */
-  def promoteBatches(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val conf = s.sparkContext.hadoopConfiguration
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs = new Path(indexDir).getFileSystem(conf)
-    val tables = Seq("postings", "termstats", "stats")
-    val ready = path("__promote_ready")
-    if (!fs.exists(path("postings_batches")) && !fs.exists(ready)) return
-    if (!fs.exists(ready)) {
-      withBatches(s, indexDir, "postings")
+  def promoteBatches(s: SparkSession, indexDir: String): Unit =
+    IndexTable.promote(s, indexDir, IndexTables) { at =>
+      IndexTable.union(s, indexDir, "postings")
         .repartition(col("term"))
         .write.mode("overwrite").partitionBy("term")
-        .parquet(s"$indexDir/__promote_tmp/postings")
-      withBatches(s, indexDir, "termstats")
+        .parquet(at("postings"))
+      IndexTable.union(s, indexDir, "termstats")
         .groupBy(col("term")).agg(sum(col("df")).as("df"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexDir/__promote_tmp/termstats")
-      withBatches(s, indexDir, "stats")
-        .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl"),
-          max(col("tw")).as("tw"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexDir/__promote_tmp/stats")
-      fs.create(ready, true).close()
+        .coalesce(1).write.mode("overwrite").parquet(at("termstats"))
+      foldedStats(s, indexDir)
+        .coalesce(1).write.mode("overwrite").parquet(at("stats"))
     }
-    tables.foreach { t =>
-      val tmp = path(s"__promote_tmp/$t")
-      if (fs.exists(tmp)) {
-        fs.delete(path(t), true)
-        fs.rename(tmp, path(t))
-      }
-    }
-    tables.foreach(t => fs.delete(path(s"${t}_batches"), true))
-    fs.delete(path("__promote_tmp"), true)
-    fs.delete(ready, false)
-  }
 
-  /** True when the index has committed append batches. Hadoop FS, not
-    * java.io — index dirs live on the lake filesystem (HDFS/S3) in a
-    * real deployment. */
-  private def hasBatches(s: SparkSession, indexDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/postings_batches")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private val IndexTables = Seq("postings", "termstats", "stats")
 
-  /** Union a base table with its `<table>_batches/batch=*` side dirs
-    * (absent side dirs → base alone). */
-  private def withBatches(s: SparkSession, indexDir: String,
-      table: String): DataFrame = {
-    val base = s.read.parquet(s"$indexDir/$table")
-    val root = new org.apache.hadoop.fs.Path(s"$indexDir/${table}_batches")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) base
-    else base.unionByName(
-      s.read.option("basePath", root.toString)
-        .parquet(root.toString).drop("batch"))
-  }
+  /** The per-batch corpus scalars summed, the fold watermark carried. */
+  private def foldedStats(s: SparkSession, indexDir: String): DataFrame =
+    IndexTable.union(s, indexDir, "stats")
+      .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl"),
+        max(col("tw")).as("tw"))
 
   /** Shared BM25 scorer: Lucene's idf = ln(1 + (N-df+.5)/(df+.5)),
     * tf-norm with k1=1.2, b=0.75.
@@ -349,14 +307,11 @@ object Search {
   def phraseMatchFromIndex(s: SparkSession, indexDir: String,
       phrases: Seq[(Int, String)] = defaultPhrases): DataFrame = {
     val terms = phrases.flatMap(_._2.split(" ")).filter(_.nonEmpty).distinct
-    val pruned = withBatches(s, indexDir, "postings")
-      .filter(col("term").isin(terms: _*))
     // pending logical deletes are anti-joined out, as in servedFrames
-    val live = Tombstones.read(s, indexDir).map(t =>
-      pruned.join(broadcast(t.select(col("doc_id"))),
-        Seq("doc_id"), "left_anti")).getOrElse(pruned)
-    val positions = live.select(col("term"), col("doc_id"),
-      explode(col("positions")).as("pos"))
+    val positions = IndexTable.live(s, indexDir, "postings", "doc_id")
+      .filter(col("term").isin(terms: _*))
+      .select(col("term"), col("doc_id"),
+        explode(col("positions")).as("pos"))
     phraseHits(s, positions, phrases)
   }
 
@@ -389,12 +344,9 @@ object Search {
     * hash compare — a distributed fsck for the retrieval tier.
     */
   def indexTermStats(s: SparkSession, indexDir: String): DataFrame = {
-    val grown = new org.apache.hadoop.fs.Path(
-      s"$indexDir/termstats_batches")
-    val fs = grown.getFileSystem(s.sparkContext.hadoopConfiguration)
     val termstats =
-      if (fs.exists(grown))
-        withBatches(s, indexDir, "termstats")
+      if (IndexTable.exists(s, s"$indexDir/termstats_batches"))
+        IndexTable.union(s, indexDir, "termstats")
           .groupBy(col("term")).agg(sum(col("df")).as("df"))
       else s.read.parquet(s"$indexDir/termstats")
     termstats
@@ -408,17 +360,15 @@ object Search {
   private def servedFrames(s: SparkSession, indexDir: String,
       queries: Seq[(Int, String)]): (DataFrame, DataFrame, DataFrame) = {
     val terms = queries.map(_._2).distinct
-    val grown = hasBatches(s, indexDir)
-    val post0 = withBatches(s, indexDir, "postings")
+    val grown = IndexTable.exists(s, s"$indexDir/postings_batches")
+    val post0 = IndexTable.union(s, indexDir, "postings")
       .filter(col("term").isin(terms: _*))
     val termstats0 =
-      if (grown) withBatches(s, indexDir, "termstats")
+      if (grown) IndexTable.union(s, indexDir, "termstats")
         .groupBy(col("term")).agg(sum(col("df")).as("df"))
       else s.read.parquet(s"$indexDir/termstats")
     val stats0 =
-      if (grown) withBatches(s, indexDir, "stats")
-        .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl"),
-          max(col("tw")).as("tw"))
+      if (grown) foldedStats(s, indexDir)
       else s.read.parquet(s"$indexDir/stats")
     Tombstones.readRaw(s, indexDir) match {
       case None => (post0, termstats0, stats0.select("n", "sumdl"))
@@ -458,10 +408,14 @@ object Search {
     */
   private def statsMinusTombs(stats0: DataFrame,
       tombRaw: DataFrame): DataFrame = {
+    // one row per doc, carrying the NEWEST batch that names it — the
+    // watermark must advance past every unfolded batch, not past an
+    // arbitrary duplicate's
     val unfolded = tombRaw
       .crossJoin(broadcast(stats0.select(col("tw"))))
       .filter(col("batch") > col("tw"))
-      .dropDuplicates("doc_id")
+      .groupBy(col("doc_id"))
+      .agg(first(col("dl")).as("dl"), max(col("batch")).as("batch"))
       .agg(count(lit(1)).as("tn"),
         sum(col("dl")).cast("double").as("tdl"),
         max(col("batch")).cast("long").as("maxb"))
@@ -492,54 +446,27 @@ object Search {
     * from the surviving postings, subtract the tombstones' (count,
     * Σdl) from the corpus scalars, retire batch dirs and tombstones —
     * the serve returns to the minimal stored-stats plan. Staged
-    * publish with a ready marker ([[promoteBatches]]'s order), so a
-    * crash at any point re-runs to completion without double-counting.
+    * publish: [[IndexTable.compact]]; the advanced fold watermark in
+    * the staged stats is what keeps its swap-to-retire window exact.
     */
-  def compactDeletes(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs = new Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__compact_ready")
-    val tombOpt = Tombstones.readRaw(s, indexDir)
-    if (tombOpt.isEmpty && !fs.exists(ready)) return
-    val tables = Seq("postings", "termstats", "stats")
-    if (!fs.exists(ready)) {
-      val tombRaw = tombOpt.get
-      val post = withBatches(s, indexDir, "postings")
+  def compactDeletes(s: SparkSession, indexDir: String): Unit =
+    IndexTable.compact(s, indexDir, IndexTables) { at =>
+      val tombRaw = Tombstones.readRaw(s, indexDir).get
+      IndexTable.union(s, indexDir, "postings")
         .join(broadcast(tombRaw.select(col("doc_id")).distinct()),
           Seq("doc_id"), "left_anti")
-      post.repartition(col("term"))
+        .repartition(col("term"))
         .write.mode("overwrite").partitionBy("term")
-        .parquet(s"$indexDir/__compact_tmp/postings")
+        .parquet(at("postings"))
       // recount from the REWRITTEN postings (one read of the compacted
       // table, term-complete), not the pre-delete stored df
-      s.read.parquet(s"$indexDir/__compact_tmp/postings")
+      s.read.parquet(at("postings"))
         .groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexDir/__compact_tmp/termstats")
+        .coalesce(1).write.mode("overwrite").parquet(at("termstats"))
       // the same watermark-guarded, doc-deduped subtraction the serve
       // runs — and the ADVANCED watermark persists with the scalars,
       // so these batches stop subtracting the moment this row lands
-      statsMinusTombs(
-        withBatches(s, indexDir, "stats")
-          .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl"),
-            max(col("tw")).as("tw")),
-        tombRaw)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexDir/__compact_tmp/stats")
-      fs.create(ready, true).close()
+      statsMinusTombs(foldedStats(s, indexDir), tombRaw)
+        .coalesce(1).write.mode("overwrite").parquet(at("stats"))
     }
-    tables.foreach { t =>
-      val tmp = path(s"__compact_tmp/$t")
-      if (fs.exists(tmp)) {
-        fs.delete(path(t), true)
-        fs.rename(tmp, path(t))
-      }
-    }
-    tables.foreach(t => fs.delete(path(s"${t}_batches"), true))
-    Tombstones.clear(s, indexDir)
-    fs.delete(path("__compact_tmp"), true)
-    fs.delete(ready, false)
-  }
 }

@@ -1024,32 +1024,18 @@ object Similarity {
       .parquet(s"$indexDir/assignments_batches")
   }
 
-  /** The LIVE row set of a persisted index: the base table plus any
-    * append-batch dirs (`cell`/`bucket` is a partition column in both
-    * layouts, so partition pruning covers both sides of the union),
-    * minus any tombstoned vec_ids (the GDPR-erasure leg — the
-    * [[ScalarQuant]] readCodes convention: tombstones are
-    * erasure-request-sized so the anti-join broadcasts, and with no
-    * tombstones the plan stays minimal, no anti-join node). One
+  /** The LIVE row set of a persisted index ([[IndexTable.live]]): the
+    * base table plus any append-batch dirs (`cell`/`bucket` is a
+    * partition column in both layouts, so partition pruning covers
+    * both sides of the union), minus any tombstoned vec_ids. One
     * definition serves every vector family — IVF assignments, IVF-PQ
     * codes, LSH buckets — because all three freeze their geometry
     * (centroids / codebooks / planes), so deletion never needs a
     * refit: a vector's absence from the candidate set IS its erasure.
     */
   private def readAssignments(s: SparkSession, indexDir: String,
-      table: String = "assignments"): DataFrame = {
-    val base = s.read.parquet(s"$indexDir/$table")
-    val batchesPath = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${table}_batches")
-    val fs = batchesPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val all =
-      if (fs.exists(batchesPath))
-        base.unionByName(s.read.parquet(batchesPath.toString).drop("batch"))
-      else base
-    Tombstones.read(s, indexDir).map(t =>
-      all.join(broadcast(t.select(col("vec_id"))),
-        Seq("vec_id"), "left_anti")).getOrElse(all)
-  }
+      table: String = "assignments"): DataFrame =
+    IndexTable.live(s, indexDir, table, "vec_id")
 
   /** Logical delete for the frozen-geometry vector tiers (IVF
     * assignments, IVF-PQ codes, LSH buckets): the vec_ids land in a
@@ -1068,39 +1054,20 @@ object Similarity {
     * the base table without the tombstoned rows (committed append
     * batches fold in — [[readAssignments]] is the single definition of
     * the live set), retire batch dirs and tombstones, and the serve
-    * returns to the minimal one-scan partition-pruned plan. Staged
-    * publish with a ready marker ([[promoteBatches]]'s order),
-    * crash-idempotent at every step; the anti-join-only adjustment
-    * makes the swap-to-retire window safe by construction
-    * ([[Tombstones.clear]]'s argument). `table`/`partitionCol` select
-    * the family: assignments/cell (IVF), codes/cell (IVF-PQ),
+    * returns to the minimal one-scan partition-pruned plan
+    * ([[IndexTable.compact]]; the anti-join-only adjustment makes its
+    * swap-to-retire window safe by construction). `table`/`partitionCol`
+    * select the family: assignments/cell (IVF), codes/cell (IVF-PQ),
     * buckets/bucket (LSH).
     */
   def compactAnnDeletes(s: SparkSession, indexDir: String,
       table: String = "assignments",
-      partitionCol: String = "cell"): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs =
-      new Path(indexDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path(s"__compact_${table}_ready")
-    if (Tombstones.read(s, indexDir).isEmpty && !fs.exists(ready)) return
-    val tmp = path(s"__compact_${table}_tmp")
-    if (!fs.exists(ready)) {
+      partitionCol: String = "cell"): Unit =
+    IndexTable.compact(s, indexDir, Seq(table))(at =>
       readAssignments(s, indexDir, table)
         .repartition(col(partitionCol)) // one file per dir, as the build
         .write.mode("overwrite").partitionBy(partitionCol)
-        .parquet(tmp.toString)
-      fs.create(ready, true).close()
-    }
-    if (fs.exists(tmp)) {
-      fs.delete(path(table), true)
-      fs.rename(tmp, path(table))
-    }
-    fs.delete(path(s"${table}_batches"), true)
-    Tombstones.clear(s, indexDir)
-    fs.delete(ready, false)
-  }
+        .parquet(at(table)))
 
   /** Drift monitor for the frozen-geometry lake: per-cell occupancy
     * over the same base+batches union the serve path scans. With
@@ -1128,94 +1095,38 @@ object Similarity {
 
   /** Fold every `batch=<id> <= upToBatch` append directory into ONE
     * `batch=<upToBatch>` directory (cell partitioning preserved) —
-    * [[graft.streaming.Streams.compactIndex]]'s side-dir pattern for
-    * the ANN lake: at daily append cadence the batch dirs are the
-    * small-files wall, and the base `assignments` table stays
-    * untouched (no corpus rewrite). Run with appends quiesced and
-    * `upToBatch` at or below the last committed batch. Idempotent
-    * under crashes: the merged rewrite lands in a side directory
-    * first (skipped on re-run once its `_SUCCESS` exists), sources
-    * are then retired and the publish is a single rename.
+    * [[IndexTable.compactRange]] for the ANN lake: at daily append
+    * cadence the batch dirs are the small-files wall, and the base
+    * `assignments` table stays untouched (no corpus rewrite).
     */
   def compactIvfAppends(s: SparkSession, indexDir: String,
       upToBatch: Long,
       table: String = "assignments_batches",
-      partitionCol: String = "cell"): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(s"$indexDir/$table")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    def coveredDirs: Seq[Path] = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch="))
-      .map(_.getPath)
-      .filter(_.getName.stripPrefix("batch=").toLong <= upToBatch)
-    val tmp = new Path(s"$indexDir/${table}__compact_tmp")
-    val tmpDone = new Path(tmp, "_SUCCESS")
-    if (!fs.exists(tmpDone)) {
-      val dirs = coveredDirs
-      if (dirs.size <= 1) return // nothing to compact, no tmp pending
-      s.read.option("basePath", root.toString)
-        .parquet(dirs.map(_.toString): _*)
-        .drop("batch")
-        .repartition(col(partitionCol))
-        .write.mode("overwrite").partitionBy(partitionCol)
-        .parquet(tmp.toString)
-    }
-    // the side dir is complete: now (re-)retire the sources and publish
-    coveredDirs.foreach(fs.delete(_, true))
-    fs.rename(tmp, new Path(root, s"batch=$upToBatch"))
-  }
+      partitionCol: String = "cell"): Unit =
+    IndexTable.compactRange(s, indexDir, table, upToBatch,
+      Some(partitionCol))
 
-  /** Admin-cadence promotion for the ANN lake — [[graft.operators
-    * .Search.promoteBatches]]'s pattern applied to the vector tiers:
-    * fold every committed [[ivfAppendBatch]] (`table = "assignments"`)
-    * or [[ivfPqAppendBatch]] (`table = "codes"`) batch dir back into
-    * the BASE table and retire the side dirs, returning the index to
-    * the minimal serve plan (one partition-pruned scan, no union
-    * node). The frozen model (centroids, codebooks) is untouched —
-    * promotion moves rows, never geometry, so the served ranking is
+  /** Admin-cadence promotion for the ANN lake: fold every committed
+    * [[ivfAppendBatch]] (`table = "assignments"`) or
+    * [[ivfPqAppendBatch]] (`table = "codes"`) batch dir back into the
+    * BASE table and retire the side dirs, returning the index to the
+    * minimal serve plan (one partition-pruned scan, no union node).
+    * The frozen model (centroids, codebooks) is untouched — promotion
+    * moves rows, never geometry, so the served ranking is
     * bit-identical before and after (`q_ann_ivf_promoted_served` and
     * `q_ann_ivfpq_promoted_served` share their one-shot twins' goldens
     * through the driver gate). This is the rare corpus-sized rewrite;
     * [[ivfAppendBatch]] + [[compactIvfAppends]] remain the
-    * per-arrival path.
-    *
-    * Crash-idempotent staged publish: the merged table lands in a
-    * side dir first, a ready marker publishes it, and only then is
-    * the base swapped and the batch dirs retired. The merge always
-    * reads the UNSWAPPED base (the swap begins only after the marker
-    * exists), and a re-run that sees the marker skips the merge — so
-    * a crash at any point re-runs to completion without
-    * double-counting, and a completed promotion re-runs as a no-op.
+    * per-arrival path. Staged publish: [[IndexTable.promote]].
     */
   def promoteBatches(s: SparkSession, indexDir: String,
       table: String = "assignments",
-      partitionCol: String = "cell"): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs =
-      new Path(indexDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batches = path(s"${table}_batches")
-    val ready = path(s"__promote_${table}_ready")
-    val tmp = path(s"__promote_${table}_tmp")
-    if (!fs.exists(batches) && !fs.exists(ready)) return
-    if (!fs.exists(ready)) {
-      s.read.parquet(path(table).toString)
-        .unionByName(s.read.option("basePath", batches.toString)
-          .parquet(batches.toString).drop("batch"))
+      partitionCol: String = "cell"): Unit =
+    IndexTable.promote(s, indexDir, Seq(table))(at =>
+      IndexTable.union(s, indexDir, table)
         .repartition(col(partitionCol)) // one file per dir, as the build
         .write.mode("overwrite").partitionBy(partitionCol)
-        .parquet(tmp.toString)
-      fs.create(ready, true).close()
-    }
-    if (fs.exists(tmp)) {
-      fs.delete(path(table), true)
-      fs.rename(tmp, path(table))
-    }
-    fs.delete(batches, true)
-    fs.delete(ready, false)
-  }
+        .parquet(at(table)))
 
   /** Concentration ratio of a persisted IVF index: max cell share ×
     * centroid count — 1.0 is perfectly balanced, `cells` is everything
@@ -1237,28 +1148,15 @@ object Similarity {
     * build ran, so refitting an index whose accreted content equals a
     * corpus reproduces that corpus's one-shot geometry bit-for-bit,
     * which is what lets `q_ann_ivf_refit_served` share `q_ann_ivf`'s
-    * golden), re-assign every vector, and swap the new (centroids,
-    * assignments) pair in atomically. Batch dirs are retired by the
-    * swap — a refit subsumes promotion.
-    *
-    * Crash-idempotent in the staged-publish style of
-    * [[promoteBatches]]: both rewritten tables land under
-    * `__refit_tmp`, a ready marker publishes them, and only then are
-    * the base tables swapped and the batch dirs retired. The fit and
-    * re-assignment always read the UNSWAPPED base (swaps begin only
-    * after the marker exists); a re-run that sees the marker skips
-    * straight to the swap.
+    * golden), re-assign every vector, and swap the new (assignments,
+    * centroids) pair in through [[IndexTable.refit]]. Batch dirs are
+    * retired by the swap — a refit subsumes promotion.
     */
   def refitIvfIndex(s: SparkSession, indexDir: String, nCells: Int = 0,
       sampleSize: Int = 2048): Unit = {
     import graft.functions.NearestCentroids.nearestCells
-    import org.apache.hadoop.fs.Path
     import s.implicits._
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs =
-      new Path(indexDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__refit_ready")
-    if (!fs.exists(ready)) {
+    IndexTable.refit(s, indexDir, Seq("assignments", "centroids")) { at =>
       val all = readAssignments(s, indexDir)
         .select(col("vec_id"), col("embedding"))
       val cells = if (nCells > 0) nCells else cellsFor(all.count())
@@ -1267,26 +1165,15 @@ object Similarity {
         .map { case (c, i) => (i, c) }
         .toDF("cell", "centroid")
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexDir/__refit_tmp/centroids")
+        .write.mode("overwrite").parquet(at("centroids"))
       all
         .select(col("vec_id"), col("embedding"),
           element_at(nearestCells(col("embedding"), centroidMatrix, 1), 1)
             .as("cell"))
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexDir/__refit_tmp/assignments")
-      fs.create(ready, true).close()
+        .parquet(at("assignments"))
     }
-    Seq("centroids", "assignments").foreach { t =>
-      val tmp = path(s"__refit_tmp/$t")
-      if (fs.exists(tmp)) {
-        fs.delete(path(t), true)
-        fs.rename(tmp, path(t))
-      }
-    }
-    fs.delete(path("assignments_batches"), true)
-    fs.delete(path("__refit_tmp"), true)
-    fs.delete(ready, false)
   }
 
   /** The drift-triggered refit policy closing the IVF lifecycle:
@@ -1318,9 +1205,9 @@ object Similarity {
     * model and codes bit-for-bit (spec-pinned, and
     * `q_ann_ivfpq_refit_served` shares `q_ann_ivfpq`'s golden) —
     * then every vector re-encodes in one narrow corpus pass and the
-    * (centroids, codebooks, codes) triple swaps atomically with the
-    * same staged-publish marker protocol; batch dirs retire with the
-    * swap. This is THE planned rewrite of the 100 TB hot tier:
+    * (codes, centroids, codebooks) triple swaps in through
+    * [[IndexTable.refit]]; batch dirs retire with the swap. This is
+    * THE planned rewrite of the 100 TB hot tier:
     * per-batch appends freeze the model ([[ivfPqAppendBatch]]),
     * [[ivfCellStats]] (table = "codes") watches drift, and the
     * re-encode is the one index-sized job, scheduled, never nightly.
@@ -1330,13 +1217,9 @@ object Similarity {
       ksub: Int = 16, sampleSize: Int = 2048): Unit = {
     import graft.functions.NearestCentroids.nearestCells
     import graft.functions.PqOps.pqEncode
-    import org.apache.hadoop.fs.Path
     import s.implicits._
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs =
-      new Path(indexDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__refit_ready")
-    if (!fs.exists(ready)) {
+    val tables = Seq("codes", "centroids", "codebooks")
+    IndexTable.refit(s, indexDir, tables) { at =>
       val all = refitFrom.select(col("vec_id"), col("embedding"))
       val cells = if (nCells > 0) nCells else cellsFor(all.count())
       val centroidMatrix = fitCentroids(all, cells, sampleSize)
@@ -1345,14 +1228,14 @@ object Similarity {
         .map { case (c, i) => (i, c) }
         .toDF("cell", "centroid")
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexDir/__refit_tmp/centroids")
+        .write.mode("overwrite").parquet(at("centroids"))
       codebooks.toIndexedSeq.zipWithIndex.flatMap { case (cb, j) =>
         cb.toIndexedSeq.zipWithIndex.map { case (c, code) =>
           (j, code, c.toSeq)
         }
       }.toDF("sub", "code", "centroid")
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexDir/__refit_tmp/codebooks")
+        .write.mode("overwrite").parquet(at("codebooks"))
       all
         .select(col("vec_id"),
           element_at(nearestCells(col("embedding"), centroidMatrix, 1), 1)
@@ -1360,19 +1243,8 @@ object Similarity {
           pqEncode(col("embedding"), codebooks).as("codes"))
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexDir/__refit_tmp/codes")
-      fs.create(ready, true).close()
+        .parquet(at("codes"))
     }
-    Seq("centroids", "codebooks", "codes").foreach { t =>
-      val tmp = path(s"__refit_tmp/$t")
-      if (fs.exists(tmp)) {
-        fs.delete(path(t), true)
-        fs.rename(tmp, path(t))
-      }
-    }
-    fs.delete(path("codes_batches"), true)
-    fs.delete(path("__refit_tmp"), true)
-    fs.delete(ready, false)
   }
 
   /** Serve IVF top-k from a persisted index ([[ivfWriteIndex]]):

@@ -197,12 +197,12 @@ object Substring {
     * dirs (counts are mergeable, so serve-time frequency is exact).
     *
     * Crash safety (r15 ADVICE): both tables stage under a dot-prefixed
-    * tmp dir (invisible to [[withBatches]]' partition discovery), then
-    * rename into place freq FIRST. A crash between the renames leaves
-    * freq visible with positions absent — the CONSERVATIVE direction
-    * (reconstructed frequency can only over-count, so spans are
-    * dropped, never invented), and a re-run with the same batchId
-    * overwrites both halves and heals it.
+    * tmp dir (invisible to [[IndexTable.union]]'s partition
+    * discovery), then rename into place freq FIRST. A crash between
+    * the renames leaves freq visible with positions absent — the
+    * CONSERVATIVE direction (reconstructed frequency can only
+    * over-count, so spans are dropped, never invented), and a re-run
+    * with the same batchId overwrites both halves and heals it.
     */
   def appendPositionsBatch(s: SparkSession, indexDir: String,
       newDocs: DataFrame, batchId: Long, minLen: Int = 8): Unit = {
@@ -214,89 +214,50 @@ object Substring {
   }
 
   /** Finish a staged batch: derive the mergeable per-gram counts from
-    * the staged positions, then rename every staged table into its
-    * `*_batches/batch=N` slot — freq FIRST (the r15 ADVICE order: a
-    * crash leaves counts visible without positions, the conservative
-    * direction), `extra` tables (the BPE index's `streams`) LAST (a
-    * torn append can hide batch docs from the served scrub's
-    * reassembly, never mis-cut them). Re-running the same batchId
-    * overwrites every slot and heals any tear.
+    * the staged positions, then commit every staged table into its
+    * `*_batches/batch=N` slot ([[IndexTable.commit]]) — freq FIRST
+    * (the r15 ADVICE order: a crash leaves counts visible without
+    * positions, the conservative direction), `extra` tables (the BPE
+    * index's `streams`) LAST (a torn append can hide batch docs from
+    * the served scrub's reassembly, never mis-cut them). Re-running
+    * the same batchId overwrites every slot and heals any tear.
     */
   private def sealBatch(s: SparkSession, indexDir: String, tmp: String,
       batchId: Long, extra: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
     s.read.parquet(s"$tmp/positions")
       .groupBy(col("h")).agg(count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(s"$tmp/freq")
-    val fs = new Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    (Seq("freq", "positions") ++ extra).foreach { t =>
-      val dst = new Path(s"$indexDir/${t}_batches/batch=$batchId")
-      fs.mkdirs(dst.getParent)
-      fs.delete(dst, true)
-      fs.rename(new Path(s"$tmp/$t"), dst)
-    }
-    fs.delete(new Path(tmp), true)
-  }
-
-  /** Union a base table with its `<table>_batches/batch=*` side dirs
-    * (absent side dirs → base alone — the [[Search]] convention). */
-  private def withBatches(s: SparkSession, indexDir: String,
-      table: String): DataFrame = {
-    val base = s.read.parquet(s"$indexDir/$table")
-    val root =
-      new org.apache.hadoop.fs.Path(s"$indexDir/${table}_batches")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) base
-    else base.unionByName(
-      s.read.option("basePath", root.toString)
-        .parquet(root.toString).drop("batch"))
+    (Seq("freq", "positions") ++ extra).foreach(t =>
+      IndexTable.commit(s, s"$tmp/$t",
+        s"$indexDir/${t}_batches/batch=$batchId"))
+    val p = new org.apache.hadoop.fs.Path(tmp)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   /** Fold accumulated append batches back into the base tables at
     * admin cadence (the index returns to its minimal one-dir serve
-    * plan). Crash-safe via the staged-tmp + ready-marker dance: every
-    * step is idempotent, so a re-run after any interruption completes
-    * the promotion instead of corrupting the index.
+    * plan; [[IndexTable.promote]]). The BPE index carries a third
+    * union-folded table (the encoded symbol streams); plain union
+    * suffices — only freq needs a merge.
     */
-  def promotePositionBatches(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val conf = s.sparkContext.hadoopConfiguration
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs = new Path(indexDir).getFileSystem(conf)
-    val ready = path("__promote_ready")
-    if (!fs.exists(path("positions_batches")) && !fs.exists(ready))
-      return
-    // the BPE index carries a third union-folded table (the encoded
-    // symbol streams); plain union suffices — only freq needs a merge
-    val tables = Seq("positions", "freq") ++
-      (if (fs.exists(path("streams"))) Seq("streams") else Nil)
-    if (!fs.exists(ready)) {
-      withBatches(s, indexDir, "positions")
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/__promote_tmp/positions")
-      withBatches(s, indexDir, "freq")
+  def promotePositionBatches(s: SparkSession, indexDir: String): Unit =
+    IndexTable.promote(s, indexDir, tablesOf(s, indexDir)) { at =>
+      IndexTable.union(s, indexDir, "positions")
+        .write.mode("overwrite").parquet(at("positions"))
+      IndexTable.union(s, indexDir, "freq")
         .groupBy(col("h")).agg(sum(col("n")).as("n"))
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/__promote_tmp/freq")
-      if (tables.contains("streams"))
-        withBatches(s, indexDir, "streams")
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/__promote_tmp/streams")
-      fs.create(ready, true).close()
+        .write.mode("overwrite").parquet(at("freq"))
+      if (hasStreams(s, indexDir))
+        IndexTable.union(s, indexDir, "streams")
+          .write.mode("overwrite").parquet(at("streams"))
     }
-    tables.foreach { t =>
-      val tmp = path(s"__promote_tmp/$t")
-      if (fs.exists(tmp)) {
-        fs.delete(path(t), true)
-        fs.rename(tmp, path(t))
-      }
-    }
-    tables.foreach(t =>
-      fs.delete(path(s"${t}_batches"), true))
-    fs.delete(path("__promote_tmp"), true)
-    fs.delete(ready, false)
-  }
+
+  private def hasStreams(s: SparkSession, indexDir: String): Boolean =
+    IndexTable.exists(s, s"$indexDir/streams")
+
+  private def tablesOf(s: SparkSession, indexDir: String): Seq[String] =
+    Seq("positions", "freq") ++
+      (if (hasStreams(s, indexDir)) Seq("streams") else Nil)
 
   /** Logical delete for the position index (the GDPR-erasure leg,
     * [[Tombstones]]): the doc_ids land as an exactly-once tombstone
@@ -316,52 +277,22 @@ object Substring {
   /** Admin-cadence delete close-out: rewrite positions without the
     * tombstoned docs (append batches fold in), recount freq from the
     * surviving positions, retire batch dirs and tombstones — the
-    * serve returns to the minimal no-anti-join plan. Staged publish
-    * with a ready marker ([[promotePositionBatches]]'s order).
+    * serve returns to the minimal no-anti-join plan
+    * ([[IndexTable.compact]]). An erased doc's BPE symbol stream
+    * leaves the lake with its positions (it IS the document,
+    * re-encoded).
     */
-  def compactPositionDeletes(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    def path(p: String) = new Path(s"$indexDir/$p")
-    val fs = new Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ready = path("__compact_ready")
-    val tombOpt = Tombstones.read(s, indexDir)
-    if (tombOpt.isEmpty && !fs.exists(ready)) return
-    // the BPE index carries the encoded symbol streams as a third
-    // table — an erased doc's stream must leave the lake with its
-    // positions (it IS the document, re-encoded)
-    val tables = Seq("positions", "freq") ++
-      (if (fs.exists(path("streams"))) Seq("streams") else Nil)
-    if (!fs.exists(ready)) {
-      val tombIds = broadcast(tombOpt.get.select(col("doc_id")))
-      withBatches(s, indexDir, "positions")
-        .join(tombIds, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/__compact_tmp/positions")
-      s.read.parquet(s"$indexDir/__compact_tmp/positions")
+  def compactPositionDeletes(s: SparkSession, indexDir: String): Unit =
+    IndexTable.compact(s, indexDir, tablesOf(s, indexDir)) { at =>
+      IndexTable.live(s, indexDir, "positions", "doc_id")
+        .write.mode("overwrite").parquet(at("positions"))
+      s.read.parquet(at("positions"))
         .groupBy(col("h")).agg(count(lit(1)).as("n"))
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/__compact_tmp/freq")
-      if (tables.contains("streams"))
-        withBatches(s, indexDir, "streams")
-          .join(tombIds, Seq("doc_id"), "left_anti")
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/__compact_tmp/streams")
-      fs.create(ready, true).close()
+        .write.mode("overwrite").parquet(at("freq"))
+      if (hasStreams(s, indexDir))
+        IndexTable.live(s, indexDir, "streams", "doc_id")
+          .write.mode("overwrite").parquet(at("streams"))
     }
-    tables.foreach { t =>
-      val tmp = path(s"__compact_tmp/$t")
-      if (fs.exists(tmp)) {
-        fs.delete(path(t), true)
-        fs.rename(tmp, path(t))
-      }
-    }
-    tables.foreach(t =>
-      fs.delete(path(s"${t}_batches"), true))
-    Tombstones.clear(s, indexDir)
-    fs.delete(path("__compact_tmp"), true)
-    fs.delete(ready, false)
-  }
 
   /** Probe a NEW batch against the persisted position index: only the
     * batch is re-grammed (per-batch gram work scales with the batch);
@@ -387,13 +318,13 @@ object Substring {
   private def probeSpansFromIndex(s: SparkSession, indexDir: String,
       rawBatchPos: DataFrame, minLen: Int, dfCap: Int): DataFrame = {
     val batchPos = Dedup.lazyCheckpoint(rawBatchPos)
-    val totFreq = withBatches(s, indexDir, "freq")
+    val totFreq = IndexTable.union(s, indexDir, "freq")
       .unionByName(batchPos.groupBy(col("h"))
         .agg(count(lit(1)).as("n")))
       .groupBy(col("h")).agg(sum(col("n")).as("n"))
       .filter(col("n") <= dfCap)
       .select(col("h"))
-    val all = withBatches(s, indexDir, "positions")
+    val all = IndexTable.union(s, indexDir, "positions")
       .withColumn("is_new", lit(false))
       .unionByName(batchPos.withColumn("is_new", lit(true)))
     val kept = Dedup.lazyCheckpoint(all.join(totFreq, Seq("h"))
@@ -544,8 +475,8 @@ object Substring {
     // size guard — the groupBy form never saw a row for it). Above
     // the ceiling the word-keyed join stands (a 10⁷-type map in one
     // row is no longer broadcast material).
-    val nTypes = vocab.count()
-    if (nTypes <= Bpe.localTrainMaxTypes(docs.sparkSession)) {
+    val localMax = Bpe.localTrainMaxTypes(docs.sparkSession)
+    if (localMax > 0 && vocab.count() <= localMax) {
       val vm = broadcast(vocab.agg(map_from_entries(
         collect_list(struct(col("word"), col("syms")))).as("__vm")))
       docs.crossJoin(vm)
@@ -699,10 +630,7 @@ object Substring {
     */
   def substringScrubBpeFromIndex(s: SparkSession, indexDir: String,
       minLen: Int = 16, dfCap: Int = 64): DataFrame = {
-    val streams0 = withBatches(s, indexDir, "streams")
-    val streams = Tombstones.read(s, indexDir).map(t =>
-      streams0.join(broadcast(t.select(col("doc_id"))),
-        Seq("doc_id"), "left_anti")).getOrElse(streams0)
+    val streams = IndexTable.live(s, indexDir, "streams", "doc_id")
     scrubFromToks(streams,
       spansFromIndex(s, indexDir, minLen, dfCap), bpeRebuild)
   }
@@ -886,8 +814,8 @@ object Substring {
     */
   private def spansFromIndex(s: SparkSession, indexDir: String,
       minLen: Int, dfCap: Int): DataFrame = {
-    val pos0 = withBatches(s, indexDir, "positions")
-    val storedFreq = withBatches(s, indexDir, "freq")
+    val pos0 = IndexTable.union(s, indexDir, "positions")
+    val storedFreq = IndexTable.union(s, indexDir, "freq")
       .select(col("h"), col("n"))
     // pending logical deletes: drop the tombstoned docs' positions and
     // subtract their per-gram counts (reconstructed from the index's

@@ -22,26 +22,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tombstones {
 
-  private def root(indexDir: String) = s"$indexDir/tombstones"
+  private[operators] def root(indexDir: String) = s"$indexDir/tombstones"
 
   /** Record a delete batch: `rows` carries the keys to erase (plus any
-    * per-key adjustment columns the family needs). Staged write (the
-    * [[Substring.appendPositionsBatch]] crash-safety convention): the
-    * batch lands whole under a dot-prefixed tmp dir — invisible to
-    * [[read]]'s partition discovery — then renames into its
+    * per-key adjustment columns the family needs). The batch lands
+    * whole under a dot-prefixed tmp dir — invisible to [[read]]'s
+    * partition discovery — then [[IndexTable.commit]] moves it into its
     * `batch=<id>` slot, so a crash mid-write can never leave a torn
     * batch visible to a serve. Re-running the same batchId replaces
     * the slot whole — retries are exactly-once.
     */
   def append(s: SparkSession, indexDir: String, rows: DataFrame,
       batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(s"${root(indexDir)}/.batch_tmp_$batchId")
-    val dst = new Path(s"${root(indexDir)}/batch=$batchId")
-    val fs = tmp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    rows.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(dst, true)
-    fs.rename(tmp, dst)
+    val tmp = s"${root(indexDir)}/.batch_tmp_$batchId"
+    rows.write.mode("overwrite").parquet(tmp)
+    IndexTable.commit(s, tmp, s"${root(indexDir)}/batch=$batchId")
+  }
+
+  /** True when a committed delete batch exists. A dir holding only a
+    * crashed append's dot-tmp has no COMMITTED batch — the serve must
+    * treat it as no pending deletions.
+    */
+  def pending(s: SparkSession, indexDir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(root(indexDir))
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.exists(p) &&
+      fs.listStatus(p).exists(_.getPath.getName.startsWith("batch="))
   }
 
   /** All committed delete batches, or None when the index has no
@@ -57,31 +63,18 @@ object Tombstones {
     * batches NEWER than the stats table's recorded watermark subtract,
     * so a serve landing between a compaction's table swap and the
     * tombstone retire (or after a crash there) never double-subtracts.
-    */
-  def readRaw(s: SparkSession, indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(root(indexDir))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // a dir holding only a crashed append's dot-tmp has no COMMITTED
-    // batch — the serve must treat it as no pending deletions
-    if (!fs.exists(p) || !fs.listStatus(p).exists(
-        _.getPath.getName.startsWith("batch="))) None
-    else Some(s.read.parquet(p.toString))
-  }
-
-  /** Retire every tombstone batch — called by the families' compaction
+    *
+    * That window is why: [[IndexTable.compact]] retires the tombstones
     * AFTER the rewritten base is swapped in. For the anti-join-only
-    * families (int8/bq/IVF/LSH/minhash/substring positions) the
-    * swap-to-retire window is safe by construction: a crash between
-    * them leaves tombstones whose keys are already absent, and the
-    * serve-time anti-join of an absent key is a no-op. Families with
-    * an aggregate-based adjustment (BM25 corpus scalars, LM counts)
-    * are NOT covered by that argument — they guard the window with the
-    * fold watermark their compaction writes into the stats table (see
-    * [[readRaw]]): folded batches stop subtracting the instant the
-    * swapped table lands, tombstoned or not.
+    * families (int8/bq/IVF/LSH/minhash/substring positions) it is safe
+    * by construction — the leftover tombstones' keys are already
+    * absent, and anti-joining an absent key is a no-op. An
+    * aggregate-based adjustment (BM25 corpus scalars, LM counts) is
+    * NOT covered by that argument, hence the watermark its compaction
+    * writes into the stats table: folded batches stop subtracting the
+    * instant the swapped table lands, tombstoned or not.
     */
-  def clear(s: SparkSession, indexDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root(indexDir))
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+  def readRaw(s: SparkSession, indexDir: String): Option[DataFrame] =
+    if (pending(s, indexDir)) Some(s.read.parquet(root(indexDir)))
+    else None
 }

@@ -509,44 +509,18 @@ object Streams {
     * last committed batch), so id `upToBatch` can never be re-run and
     * the compacted rows are never wrongly excluded.
     *
-    * Idempotent under crashes, in the marker style of the maintainer
-    * itself: (1) the merged rewrite lands in a side directory and is
-    * skipped on re-run once its `_SUCCESS` exists — so a crash between
-    * (2) deleting the source directories and (3) publishing the
-    * compacted one loses nothing: re-running converges from the side
-    * directory. The publish itself is a single directory rename.
+    * The pass is [[graft.operators.IndexTable.compactRange]]: the
+    * merged dir is staged, swapped into the `batch=<upToBatch>` slot
+    * and only then are the other covered dirs retired, so a crash or
+    * a refused rename anywhere re-runs to completion. Until that
+    * re-run, a crash between the swap and the retire leaves the
+    * absorbed rows visible twice — re-run before restarting the
+    * maintainer.
     */
   def compactIndex(s: SparkSession, lakeDir: String,
       upToBatch: Long): Unit =
-    Seq("documents", "buckets", "pairs")
-      .foreach(t => compactTable(s, s"$lakeDir/$t", upToBatch))
-
-  private def compactTable(s: SparkSession, path: String,
-      hi: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    def coveredDirs: Seq[Path] = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .map(_.getPath)
-      .filter(_.getName.stripPrefix("batch=").toLong <= hi)
-    val tmp = new Path(s"${path}__compact_tmp")
-    val tmpDone = new Path(tmp, "_SUCCESS")
-    if (!fs.exists(tmpDone)) {
-      val dirs = coveredDirs
-      if (dirs.size <= 1) return // nothing to compact, no tmp pending
-      // basePath keeps the batch partition column during the read; the
-      // rewrite drops it — the published directory name carries it
-      s.read.option("basePath", path)
-        .parquet(dirs.map(_.toString): _*)
-        .drop("batch")
-        .write.mode("overwrite").parquet(tmp.toString)
-    }
-    // the side dir is complete: now (re-)retire the sources and publish
-    coveredDirs.foreach(fs.delete(_, true))
-    fs.rename(tmp, new Path(root, s"batch=$hi"))
-  }
+    Seq("documents", "buckets", "pairs").foreach(t =>
+      graft.operators.IndexTable.compactRange(s, lakeDir, t, upToBatch))
 
   /** The driver-gate streaming row (`q_stream_hourly`): run the
     * tumbling-window hourly aggregate over the events table as a real

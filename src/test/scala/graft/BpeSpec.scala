@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Bpe
+import graft.operators.{Bpe, Substring}
 
 /** The distributed BPE trainer: the classic Sennrich
   * low/lower/newest/widest merge sequence reproduced by hand
@@ -74,7 +74,8 @@ class BpeSpec extends SparkSuite {
         Seq.fill(3)("widest").mkString(" "))))
     val key = "spark.graft.bpe.localTrainMaxTypes"
     def run(): (Seq[(Int, String, String, Long)],
-        Seq[(String, Long, Seq[String])], Seq[(String, Seq[String])]) = {
+        Seq[(String, Long, Seq[String])], Seq[(String, Seq[String])],
+        Seq[(Long, Long, String)]) = {
       val (ms, state) = Bpe.learn(spark, d, nMerges = 6)
       val vocab = state.select("word", "freq", "syms").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2)))
@@ -86,7 +87,13 @@ class BpeSpec extends SparkSuite {
         .select("word", "syms").collect()
         .map(r => (r.getString(0), r.getSeq[String](1)))
         .sortBy(_._1).toSeq
-      (ms, vocab, replayed)
+      // the symbol-stream encoder behind the BPE scrub takes the same
+      // gate: reassembled text runs through every doc's stream
+      val scrubbed = Substring.substringScrubBpe(spark, d, minLen = 2,
+          nMerges = 6)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+        .sortBy(_._1).toSeq
+      (ms, vocab, replayed, scrubbed)
     }
     val local = run() // tiny corpus: under the default gate
     spark.conf.set(key, "0") // force the distributed rounds
@@ -95,6 +102,20 @@ class BpeSpec extends SparkSuite {
     assert(local._1 === dist._1)
     assert(local._2 === dist._2)
     assert(local._3 === dist._3)
+    assert(local._4.nonEmpty)
+    assert(local._4 === dist._4)
+  }
+
+  test("an unparseable localTrainMaxTypes is a configuration error " +
+      "naming the key, not a silent fallback to the default gate") {
+    val d = plant(Seq((1L, "ab ab")))
+    val key = "spark.graft.bpe.localTrainMaxTypes"
+    spark.conf.set(key, "256k")
+    val e =
+      try intercept[IllegalArgumentException](
+        Bpe.merges(spark, d, nMerges = 1).collect())
+      finally spark.conf.unset(key)
+    assert(e.getMessage.contains(key))
   }
 
   test("frozen-model apply: persisted merges encode UNSEEN words by " +

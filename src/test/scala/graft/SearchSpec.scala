@@ -140,10 +140,14 @@ class SearchSpec extends SparkSuite {
     Search.deleteDocs(spark, idx, doomed, batchId = 1L)
     Search.deleteDocs(spark, idx, doomed, batchId = 2L)
     assert(Search.bm25FromIndex(spark, idx).collect().toSet === want)
-    // the recovery re-run retires them and nothing changes
+    // the recovery re-run retires them and nothing changes; the
+    // watermark stays past the NEWEST folded batch, whichever of the
+    // duplicate tombstone rows the fold happened to keep
     Search.compactDeletes(spark, idx)
     assert(!new java.io.File(s"$idx/tombstones").exists())
     assert(Search.bm25FromIndex(spark, idx).collect().toSet === want)
+    assert(spark.read.parquet(s"$idx/stats").collect().head
+      .getAs[Long]("tw") === 2L)
   }
 
   test("phraseMatch counts exact consecutive spans, including " +
