@@ -95,6 +95,26 @@ object Bpe {
         s"$key must be an integer count of word types, got '$v'")))
   }
 
+  /** Whether a (word, syms) vocabulary may fold into ONE broadcast map
+    * row — the gate of [[docTokenStats]] and `Substring.symbolStreams`.
+    * Both bounds must hold: the type count under [[localTrainMaxTypes]]
+    * and the map's estimated size, sum(length(word) + 8·size(syms))
+    * bytes, under `spark.sql.autoBroadcastJoinThreshold` — a vocabulary
+    * of long words can pass the count and still not belong in one
+    * broadcast row. One aggregate job answers both.
+    */
+  private[graft] def broadcastableVocab(vocab: DataFrame): Boolean = {
+    val s = vocab.sparkSession
+    val maxTypes = localTrainMaxTypes(s)
+    maxTypes > 0 && {
+      val r = vocab.agg(count(lit(1)), coalesce(
+          sum(length(col("word")) + size(col("syms")) * 8), lit(0L)))
+        .head()
+      r.getLong(0) <= maxTypes &&
+        r.getLong(1) <= s.sessionState.conf.autoBroadcastJoinThreshold
+    }
+  }
+
   /** Spark's string ordering is UTF8String.compareTo — unsigned
     * lexicographic comparison of the UTF-8 bytes. The local argmax
     * tie-break must match it bit-for-bit (Java String.compareTo orders
@@ -470,7 +490,7 @@ object Bpe {
   }
 
   /** Per-document token statistics under an encoded vocabulary, with
-    * ZERO token explode and ZERO join below the type ceiling (r18,
+    * ZERO token explode and ZERO join inside [[broadcastableVocab]] (r18,
     * guide §2.3 — aggregate before you shuffle): the vocabulary folds
     * into one broadcast (word → n_syms) map row and every document
     * row computes its own (n_words, n_chars, n_syms) triple in place;
@@ -478,7 +498,7 @@ object Bpe {
     * rows. Inner-join semantics are matched exactly: words absent
     * from the vocabulary drop (the null filter), and a document whose
     * every token drops contributes no row (the size guard — the join
-    * form never saw it). Above the ceiling the exploded token join
+    * form never saw it). Past that gate the exploded token join
     * stands unchanged.
     */
   private def docTokenStats(docsIn: DataFrame, vocab: DataFrame)
@@ -487,9 +507,7 @@ object Bpe {
     // the corpus stats; lang/source for the fertility report)
     val docs = docsIn
     val keys = docs.columns.filter(_ != "text").toSeq
-    val s = docs.sparkSession
-    val localMax = localTrainMaxTypes(s)
-    if (localMax > 0 && vocab.count() <= localMax) {
+    if (broadcastableVocab(vocab)) {
       val vm = broadcast(vocab.agg(map_from_entries(collect_list(
         struct(col("word"), size(col("syms")).as("ns")))).as("__vm")))
       docs.crossJoin(vm)

@@ -465,18 +465,17 @@ object Substring {
     // r18 (guide §2.4 — remove shuffles outright): the join+groupBy
     // form below pays a token explode, a word-keyed join, and a
     // doc_id-keyed aggregate (two exchanges over per-token rows) just
-    // to restore an order the DOCUMENT ROW already had. Below the
-    // trainer's own type ceiling the vocabulary folds into ONE
-    // broadcast map row, and each document encodes in place:
-    // token array → per-word symbol arrays → flatten, zero exchanges,
+    // to restore an order the DOCUMENT ROW already had. Inside
+    // [[Bpe.broadcastableVocab]]'s type and byte bounds the vocabulary
+    // folds into ONE broadcast map row, and each document encodes in
+    // place: token array → per-word symbol arrays → flatten, zero exchanges,
     // order preserved by construction. Semantics match the inner join
     // exactly: words absent from the vocabulary drop (the null
     // filter), and a document whose every token drops vanishes (the
-    // size guard — the groupBy form never saw a row for it). Above
-    // the ceiling the word-keyed join stands (a 10⁷-type map in one
-    // row is no longer broadcast material).
-    val localMax = Bpe.localTrainMaxTypes(docs.sparkSession)
-    if (localMax > 0 && vocab.count() <= localMax) {
+    // size guard — the groupBy form never saw a row for it). Past
+    // the gate the word-keyed join stands (a 10⁷-type map in one row
+    // is no longer broadcast material).
+    if (Bpe.broadcastableVocab(vocab)) {
       val vm = broadcast(vocab.agg(map_from_entries(
         collect_list(struct(col("word"), col("syms")))).as("__vm")))
       docs.crossJoin(vm)

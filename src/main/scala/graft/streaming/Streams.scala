@@ -375,13 +375,30 @@ object Streams {
     *  5. optionally the int8 quantized tier
     *     ([[graft.operators.ScalarQuant.sqAppendBatch]]) — the warm
     *     store the hybrid serve's dense leg reads;
-    *  6. optionally the LM count model
+    *  6. optionally the binary bit tier
+    *     ([[graft.operators.BinaryQuant.bqAppendBatch]]);
+    *  7. optionally the LM count model
     *     ([[graft.operators.Perplexity.appendBatch]] — additive);
-    *  7. optionally the whitespace-token substring position index
+    *  8. optionally the whitespace-token substring position index
     *     ([[graft.operators.Substring.appendPositionsBatch]]);
-    *  8. optionally the BPE substring index
+    *  9. optionally the BPE substring index
     *     ([[graft.operators.Substring.bpeAppendBatch]] — frozen
     *     tokenizer; OOV words replay the persisted merges).
+    *
+    * The scrub runs once per micro-batch and is persisted; the
+    * quarantine write and the index legs (up to eight) then run
+    * CONCURRENTLY, one thread per leg, over the persisted admitted
+    * rows (the default FIFO scheduler overlaps their driver-side
+    * planning, listing and commits). The batch waits for every leg,
+    * fails with the first failure in leg order (the others suppressed
+    * onto it) and commits nothing then; both caches are released only
+    * after every leg has ended. Legs share no mutable state, and that
+    * is the rule a new leg must keep: it writes only under its own
+    * directory, and it never sets session conf or registers a temp
+    * view. One exception stands: above the BPE local ceiling the BPE
+    * leg's OOV merge replay turns AQE off around its fold rounds
+    * ([[graft.operators.Iterate.withoutAqe]]), so a leg planned in
+    * that window plans without AQE — a layout choice, never a result.
     *
     * All the indexes advance under the SAME micro-batch id, and every
     * write is a `batch=<id>`-keyed overwrite — so a checkpoint replay
@@ -410,90 +427,114 @@ object Streams {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
+          import graft.operators.{BinaryQuant, Perplexity, ScalarQuant,
+            Scrub, Search, Similarity, Substring}
           // the semantic gate first (it reads the raw embedding and is
           // a pure projection); its flags ride along through the text
           // scrub so one persist covers both gates
           val gated = semanticProbes match {
-            case Some(p) =>
-              graft.operators.Scrub.semanticGate(batch, p, semanticTau)
+            case Some(p) => Scrub.semanticGate(batch, p, semanticTau)
             case None => batch
               .withColumn("max_eval_sim", lit(-1.0))
               .withColumn("semantic_hit", lit(false))
           }
           val scrubbed = scrubbedDocuments(gated, probeGrams).persist()
           val rejected = col("contaminated") || col("semantic_hit")
+          // admitted docs: redacted text, original embedding
+          val admitted = scrubbed.filter(!rejected)
+            .select(col("doc_id"), col("clean_text").as("text"),
+              col("embedding"))
+            .persist()
           try {
-            scrubbed.filter(rejected)
-              .select(col("doc_id"), col("text"), col("clean_text"),
-                col("pii_found"), col("contaminated"),
-                col("semantic_hit"), col("max_eval_sim"))
-              .write.mode("overwrite")
-              .parquet(s"$lakeDir/quarantine/batch=$batchId")
-            // admitted docs: redacted text, original embedding
-            val admitted = scrubbed.filter(!rejected)
-              .select(col("doc_id"), col("clean_text").as("text"),
-                col("embedding"))
-              .persist()
-            try {
-              nearDupBatchSync(
-                admitted.select(col("doc_id"), col("text")),
-                lakeDir, batchId, threshold)
-              graft.operators.Similarity.ivfAppendBatch(
-                admitted.sparkSession, annIndexDir,
-                admitted.select(col("doc_id").as("vec_id"),
-                  col("embedding")),
-                batchId)
-              graft.operators.Search.appendBatch(admitted.sparkSession,
-                bm25IndexDir,
-                admitted.select(col("doc_id"), col("text")), batchId)
-              int8IndexDir.foreach(dir =>
-                graft.operators.ScalarQuant.sqAppendBatch(
-                  admitted.sparkSession, dir,
-                  admitted.select(col("doc_id").as("vec_id"),
-                    col("embedding")),
-                  batchId))
-              // binary bit-tier leg (r16): sign-packed words for the
-              // admitted embeddings — like int8, closed-form packing
-              // means the grown bit table is an exact rebuild, so the
-              // served Hamming shortlist stays oracle-equal to a
-              // one-shot build over the admitted corpus
-              bqIndexDir.foreach(dir =>
-                graft.operators.BinaryQuant.bqAppendBatch(
-                  admitted.sparkSession, dir,
-                  admitted.select(col("doc_id").as("vec_id"),
-                    col("embedding")),
-                  batchId))
-              // the LM count model grows from the admitted stream —
+            val s = admitted.sparkSession
+            val texts = admitted.select(col("doc_id"), col("text"))
+            val vecs = admitted.select(col("doc_id").as("vec_id"),
+              col("embedding"))
+            def optional(dir: Option[String], name: String)(
+                write: String => Unit): Option[(String, () => Unit)] =
+              dir.map(d => name -> (() => write(d)))
+            val legs: Seq[(String, () => Unit)] = Seq(
+              "quarantine" -> (() => scrubbed.filter(rejected)
+                .select(col("doc_id"), col("text"), col("clean_text"),
+                  col("pii_found"), col("contaminated"),
+                  col("semantic_hit"), col("max_eval_sim"))
+                .write.mode("overwrite")
+                .parquet(s"$lakeDir/quarantine/batch=$batchId")),
+              "neardup" -> (() =>
+                nearDupBatchSync(texts, lakeDir, batchId, threshold)),
+              "ivf" -> (() => Similarity.ivfAppendBatch(s, annIndexDir,
+                vecs, batchId)),
+              "bm25" -> (() => Search.appendBatch(s, bm25IndexDir, texts,
+                batchId))) ++
+              optional(int8IndexDir, "int8")(
+                ScalarQuant.sqAppendBatch(s, _, vecs, batchId)) ++
+              // closed-form sign packing: the grown bit table is an
+              // exact rebuild over the admitted corpus
+              optional(bqIndexDir, "bq")(
+                BinaryQuant.bqAppendBatch(s, _, vecs, batchId)) ++
               // the stream IS the curated feed, so every admitted doc
               // trains (reference = true); additive counts keep the
               // grown model exactly equal to a batch train
-              pplModelDir.foreach(dir =>
-                graft.operators.Perplexity.appendBatch(
-                  admitted.sparkSession, dir,
-                  admitted.select(col("doc_id"), col("text")), batchId,
-                  reference = lit(true)))
-              // exact-substring leg (r15): gram positions + mergeable
-              // counts for the admitted REDACTED text land as the same
-              // batch id; overwrite-per-batch makes replay idempotent
-              substrIndexDir.foreach(dir =>
-                graft.operators.Substring.appendPositionsBatch(
-                  admitted.sparkSession, dir,
-                  admitted.select(col("doc_id"), col("text")), batchId))
-              // BPE-substring leg (r16): the admitted redacted text
-              // encodes under the index's FROZEN tokenizer — persisted
-              // vocabulary plus the runtime OOV path (redaction tags
-              // and fresh-source words replay the persisted merges) —
-              // and lands streams/positions/counts under this batch
-              // id; overwrite-per-batch keeps replay idempotent
-              bpeIndexDir.foreach(dir =>
-                graft.operators.Substring.bpeAppendBatch(
-                  admitted.sparkSession, dir,
-                  admitted.select(col("doc_id"), col("text")), batchId))
-            } finally admitted.unpersist()
-          } finally scrubbed.unpersist()
+              optional(pplModelDir, "ppl")(Perplexity.appendBatch(s, _,
+                texts, batchId, reference = lit(true))) ++
+              optional(substrIndexDir, "substr")(
+                Substring.appendPositionsBatch(s, _, texts, batchId)) ++
+              // frozen tokenizer: persisted vocabulary plus the OOV
+              // path (redaction tags and fresh-source words replay the
+              // persisted merges)
+              optional(bpeIndexDir, "bpe")(
+                Substring.bpeAppendBatch(s, _, texts, batchId))
+            runLegs(legs, batchId)
+          } finally {
+            admitted.unpersist()
+            scrubbed.unpersist()
+          }
         }
       }
       .start()
+
+  /** Runs each of a micro-batch's legs on its own thread and returns
+    * once every leg has ended. The threads are started from the
+    * calling stream thread, so each inherits the stream's Spark local
+    * properties — among them the job group `StreamingQuery.stop()`
+    * cancels — and are never reused by a later batch. The first
+    * failure in leg order is rethrown with the others suppressed onto
+    * it. An interrupt of the caller interrupts every leg, still waits
+    * for all of them, and then surfaces as an `InterruptedException`:
+    * no leg is left writing once this returns or throws.
+    */
+  private def runLegs(legs: Seq[(String, () => Unit)],
+      batchId: Long): Unit = {
+    val failures = new Array[Throwable](legs.size)
+    val threads = legs.zipWithIndex.map { case ((name, leg), i) =>
+      val t = new Thread(() =>
+        try leg() catch { case e: Throwable => failures(i) = e },
+        s"curation-batch-$batchId-$name")
+      t.setDaemon(true)
+      t
+    }
+    var interrupted = false
+    try threads.foreach(_.start())
+    finally threads.foreach { t =>
+      while (t.isAlive) {
+        try t.join()
+        catch {
+          case _: InterruptedException =>
+            interrupted = true
+            threads.foreach(_.interrupt())
+        }
+      }
+    }
+    val failed = failures.toSeq.filter(_ != null)
+    val first =
+      if (interrupted) Some(new InterruptedException(
+        s"curation batch $batchId interrupted while its legs ran"))
+      else failed.headOption
+    first.foreach { e =>
+      failed.filter(_ ne e).foreach(e.addSuppressed)
+      throw e
+    }
+  }
 
   /** Index lifecycle maintenance for [[nearDupMaintainer]]'s lake: each
     * micro-batch leaves a `batch=<id>` partition directory in all three

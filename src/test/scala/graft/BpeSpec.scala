@@ -106,6 +106,38 @@ class BpeSpec extends SparkSuite {
     assert(local._4 === dist._4)
   }
 
+  test("the broadcast vocabulary map is bounded by bytes as well as " +
+      "types: under a lowered autoBroadcastJoinThreshold the encoders " +
+      "take the join fallback and emit the same streams and stats") {
+    val d = plant(Seq(
+      (1L, Seq.fill(5)("low").mkString(" ") + " " +
+        Seq.fill(2)("lower").mkString(" ")),
+      (2L, Seq.fill(6)("newest").mkString(" ") + " " +
+        Seq.fill(3)("widest").mkString(" "))))
+    val vocab = Bpe.learn(spark, d, nMerges = 6)._2.select("word", "syms")
+    // the scrub reassembles text from every doc's symbol stream
+    // (Substring.symbolStreams); encodeStats folds the per-doc token
+    // stats (Bpe.docTokenStats) — the two gated encoders
+    def run(): (Seq[(Long, Long, String)], Seq[String]) = (
+      Substring.substringScrubBpe(spark, d, minLen = 2, nMerges = 6)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+        .sortBy(_._1).toSeq,
+      Bpe.encodeStats(spark, d, nMerges = 6).collect().map(_.toString)
+        .toSeq)
+    assert(Bpe.broadcastableVocab(vocab))
+    val mapped = run()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "16") // bytes: under the 4-type map's estimate
+    val joined =
+      try {
+        assert(!Bpe.broadcastableVocab(vocab))
+        run()
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(mapped._1.nonEmpty)
+    assert(mapped === joined)
+  }
+
   test("an unparseable localTrainMaxTypes is a configuration error " +
       "naming the key, not a silent fallback to the default gate") {
     val d = plant(Seq((1L, "ab ab")))

@@ -194,23 +194,15 @@ class StreamsSpec extends SparkSuite {
     def batchDirs(path: String): Seq[String] =
       new java.io.File(path).listFiles().toSeq.map(_.getName)
         .filter(_.startsWith("batch=")).sorted
-    assert(batchDirs(s"$lake/documents") === Seq("batch=0", "batch=1"))
-    assert(batchDirs(s"$ann/assignments_batches") ===
-      Seq("batch=0", "batch=1"))
-    assert(batchDirs(s"$bm25/postings_batches") ===
-      Seq("batch=0", "batch=1"))
-    assert(batchDirs(s"$int8/codes_batches") ===
-      Seq("batch=0", "batch=1"))
-    assert(batchDirs(s"$bq/words_batches") ===
-      Seq("batch=0", "batch=1"))
-    assert(batchDirs(s"$ppl/bigrams_batches") ===
-      Seq("batch=0", "batch=1"))
-    assert(batchDirs(s"$substr/positions_batches") ===
-      Seq("batch=0", "batch=1"))
-    assert(batchDirs(s"$bpe/positions_batches") ===
-      Seq("batch=0", "batch=1"))
-    assert(batchDirs(s"$bpe/streams_batches") ===
-      Seq("batch=0", "batch=1"))
+    // every leg's table holds exactly the two committed batch ids
+    val grown = Seq(s"$lake/documents", s"$ann/assignments_batches",
+      s"$bm25/postings_batches", s"$int8/codes_batches",
+      s"$bq/words_batches", s"$ppl/bigrams_batches",
+      s"$substr/positions_batches", s"$bpe/positions_batches",
+      s"$bpe/streams_batches")
+    def twoBatches(): Unit = grown.foreach(p =>
+      assert(batchDirs(p) === Seq("batch=0", "batch=1"), p))
+    twoBatches()
     // ANN leg: the grown index serves the one-shot build over
     // everything-but-quarantined (frozen geometry, pure assignment)
     val annRef = tmpDir("cur_ann_ref")
@@ -326,15 +318,79 @@ class StreamsSpec extends SparkSuite {
     // unchanged — the composed pipeline is exactly-once as a whole
     val q2 = Streams.curationMaintainer(stream(), Seq(probe), lake, ann,
       bm25, ckpt, int8IndexDir = Some(int8), bqIndexDir = Some(bq),
-      pplModelDir = Some(ppl))
+      pplModelDir = Some(ppl),
+      substrIndexDir = Some(substr), bpeIndexDir = Some(bpe))
     q2.awaitTermination(300000)
-    assert(batchDirs(s"$bm25/postings_batches") ===
-      Seq("batch=0", "batch=1"))
+    twoBatches()
     assert(serveBm(bm25) === serveBm(bm25Ref))
     assert(serveAnn(ann) === serveAnn(annRef))
     assert(serveInt8(int8) === serveInt8(int8Ref))
     assert(serveBq(bq) === serveBq(bqRef))
     assert(servePpl(ppl) === servePpl(pplRef))
+    assert(serveSubstr(substr) === serveSubstr(substrRef))
+    assert(bpeDupsServe(bpe) === bpeDupsServe(bpeRef))
+    assert(bpeScrubServe(bpe) === bpeScrubServe(bpeRef))
+  }
+
+  test("curationMaintainer: a failing leg fails the batch only after " +
+    "every leg has ended; the restart replays it exactly-once") {
+    import graft.operators.{Search, Similarity}
+    val d = sf()
+    val lake = tmpDir("fail_lake")
+    val ann = tmpDir("fail_ann") // no centroids: the IVF leg fails
+    val bm25 = tmpDir("fail_bm25")
+    val stage = tmpDir("fail_stage")
+    val ckpt = tmpDir("fail_ckpt")
+    val streamed = Tables.documents(spark, d)
+      .select(col("doc_id"), col("text"))
+      .join(Tables.embeddings(spark, d)
+        .select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
+      .filter(col("doc_id") % 5 === 4)
+    val admittedIds =
+      streamed.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    Search.buildIndex(spark, d, bm25,
+      docFilter = Some(col("doc_id") % 5 =!= 4))
+    Seq("a" -> (col("doc_id") % 2 === 0), "b" -> (col("doc_id") % 2 =!= 0))
+      .foreach { case (name, part) =>
+        val tmp = tmpDir(s"fail_stage_$name")
+        streamed.filter(part).coalesce(1).write.mode("overwrite")
+          .parquet(tmp)
+        val f = new java.io.File(tmp).listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.copy(f.toPath,
+          java.nio.file.Paths.get(s"$stage/$name.parquet"))
+      }
+    def start() = Streams.curationMaintainer(
+      spark.readStream.schema(streamed.schema)
+        .option("maxFilesPerTrigger", 1).parquet(stage),
+      Seq("zzz never a gram"), lake, ann, bm25, ckpt)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      start().awaitTermination(300000))
+    // the IVF leg's read error is carried up the cause chain ...
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(chain.exists(c => Option(c.getMessage)
+      .exists(_.contains(s"$ann/centroids"))), chain.mkString("\n"))
+    // ... and the BM25 leg had finished its last write by then
+    assert(new java.io.File(s"$bm25/stats_batches/batch=0/_SUCCESS")
+      .exists)
+    assert(!new java.io.File(s"$ckpt/commits/0").exists)
+    // build the missing index, restart: batch 0 replays, batch 1 runs
+    Similarity.ivfWriteIndex(spark, d, ann,
+      assignOnly = Some(col("vec_id") % 5 =!= 4))
+    start().awaitTermination(300000)
+    def batchDirs(path: String): Seq[String] =
+      new java.io.File(path).listFiles().toSeq.map(_.getName)
+        .filter(_.startsWith("batch=")).sorted
+    def ids(path: String, c: String): Set[Long] =
+      spark.read.parquet(path).select(col(c)).distinct().collect()
+        .map(_.getLong(0)).toSet
+    Seq(s"$lake/documents" -> "doc_id",
+      s"$ann/assignments_batches" -> "vec_id",
+      s"$bm25/postings_batches" -> "doc_id").foreach { case (p, c) =>
+      assert(batchDirs(p) === Seq("batch=0", "batch=1"), p)
+      assert(ids(p, c) === admittedIds, p)
+    }
   }
 
   test("curationMaintainer semantic leg: a paraphrase leak the n-gram " +
