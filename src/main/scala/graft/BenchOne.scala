@@ -1,17 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Single-query timer (tools-only): `runMain graft.BenchOne <query>...`
-  * runs each named query 3× at sf0.1 on local[32] and prints wall
-  * times — first run shows plan/codegen cost, later runs steady state.
+  * runs each named query 3× at sf0.1 on `SPARK_GRAFT_CPUS` cores
+  * (default 4) and prints wall times — first run shows plan/codegen
+  * cost, later runs steady state.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cores)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.read.parquet(s"$d/region.parquet").count() // warm
     if (args.exists(_.endsWith("_served"))) SparkEntry.prepare(spark, d)

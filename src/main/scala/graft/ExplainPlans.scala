@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan of the named
   * queries (tools-only; not part of the driver contract).
   * Usage: runMain graft.ExplainPlans q1_pricing q3_shipping
@@ -16,13 +14,7 @@ object ExplainPlans {
     // downstream (r17 substring layout work)
     if (!sys.env.contains("GRAFT_EXPLAIN_KEEP_CHECKPOINTS"))
       sys.props("graft.audit.noCheckpoint") = "true"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4)
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     // *_served queries read persisted index paths even at plan time —

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Golden-oracle generator (tools-only): prints a registered query's
   * rows as `(v, v, ...)` VALUES tuples for pinning into a registry
   * golden (the pattern behind q_simhash_pairs / q_ann_lsh /
@@ -14,13 +12,7 @@ object GoldenDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4)
     if (name.endsWith("_served")) SparkEntry.prepare(spark, dir)
     val df = SparkEntry.queries(name)(spark, dir)
     println(df.schema.treeString)

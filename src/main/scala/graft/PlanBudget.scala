@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 
 /** Shared plan-shape counters for the standing exchange-budget gate
@@ -37,20 +37,14 @@ object PlanAudit {
   * exchange counts the EntrySpec budget gate enforces. Run after any
   * intentional plan change (and after a driver testdata regen, which
   * can flip the conditional parallelism-floor repartitions):
-  * `sbt "runMain graft.PlanBudget"`. Session config mirrors
-  * SparkSuite's exactly — the counts are config-sensitive.
+  * `sbt "runMain graft.PlanBudget"`. The counts are config-sensitive,
+  * so the session has SparkSuite's fixed 4 cores.
   */
 object PlanBudget {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("tools/plan_budget.json")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4)
     SparkEntry.prepare(spark, sfDir)
     val entries = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>

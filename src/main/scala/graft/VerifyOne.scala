@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Tools-only fast loop: `runMain graft.VerifyOne <sfDir> <outDir> <q>...`
@@ -10,14 +9,7 @@ import java.nio.file.{Files, Paths}
 object VerifyOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cores)
     new java.io.File(outDir).mkdirs()
     if (names.exists(SparkEntry.needsPrepare)) SparkEntry.prepare(spark, sfDir)
     names.foreach { name =>

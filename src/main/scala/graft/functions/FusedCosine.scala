@@ -19,8 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
   * array; this fuses dot product and both norms into one allocation-free
   * loop inside whole-stage codegen.
   *
-  * Semantics mirror the composed form EXACTLY so [[graft.plans.FuseCosineRule]]
-  * is a safe global rewrite:
+  * Semantics mirror the composed form EXACTLY, so an operator can swap
+  * [[graft.operators.Similarity.cosine]] for this kernel at its call
+  * site without changing a result:
   *  - a null array yields null (BinaryExpression null-safe eval);
   *  - arrays of UNEQUAL length yield null (zip_with pads with null, the
   *    null product nulls the whole aggregate sum);
@@ -30,8 +31,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
   *    the composed form ([[graft.operators.Similarity.cosine]]) uses
   *    `try_divide`, which returns null on a zero divisor in every SQL
   *    mode, so the fused form must too (raw IEEE division would produce
-  *    NaN and break rewrite parity; FuseCosineRule refuses to rewrite
-  *    ANSI-mode divides, which throw instead);
+  *    NaN and break that parity; a plain ANSI-mode divide throws
+  *    instead, so only the `try_divide` form is an equivalent);
   *  - otherwise: the same sequential double accumulation (float×float
   *    exact in double), so results are bit-identical to the built-in
   *    composition and to a sequential double-based SQL oracle.
@@ -75,8 +76,8 @@ case class FusedCosineSimilarity(left: Expression, right: Expression)
       nb += yi * yi
       i += 1
     }
-    // try_divide(x, 0.0) is null; match it so FuseCosineRule never
-    // changes results.
+    // try_divide(x, 0.0) is null; match it so swapping in the fused
+    // kernel never changes results.
     if (na == 0.0 || nb == 0.0) null
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }

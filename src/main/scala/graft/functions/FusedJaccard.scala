@@ -140,17 +140,4 @@ object FusedJaccardSorted {
   def fusedJaccard(a: Column, b: Column): Column =
     GraftBridge.column(FusedJaccardSorted(
       GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** SQL registration: `SELECT fused_jaccard_sorted(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fused_jaccard_sorted",
-      exprs => {
-        if (exprs.length != 2) {
-          throw GraftBridge.wrongNumArgsError("fused_jaccard_sorted", 2,
-            exprs.length)
-        }
-        FusedJaccardSorted(exprs.head, exprs(1))
-      },
-      "built-in")
 }

@@ -775,7 +775,7 @@ object Dedup {
     */
   /** Per-doc DISTINCT shingle hashes, unsorted, MATERIALIZED — the
     * novelty family's gram source. Two measured pathologies shape
-    * this (NoveltyProbe, sf0.1): (1) the higher-order shingle chain
+    * this (r14 A/B timings, sf0.1): (1) the higher-order shingle chain
     * (transform/concat_ws/array_distinct/xxhash64) is interpreted,
     * and exploding a COMPUTED array re-pays it per generator row —
     * ~5 s vs 0.3 s exploding a materialized attribute — so the

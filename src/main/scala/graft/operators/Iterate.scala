@@ -19,12 +19,12 @@ object Iterate {
     * discover at runtime), so AQE has nothing left to adapt: its
     * per-query cost is pure driver-side re-planning. Measured on the
     * BPE trainer (16 argmax rounds over the checkpointed word table,
-    * interleaved A/B in one JVM — the `ScaleProbe bpe` probe): min
+    * interleaved A/B in one JVM, r17 — OPTIMIZATION_r17.md): min
     * 2.36 s scoped-off vs 2.50 s kept — a small, consistent win once
     * the size-adaptive coalesce has already removed the rounds'
     * exchanges. The scope is NOT applied to loops whose rounds carry
     * real data exchanges: the same A/B on the graph fixpoints
-    * (`ScaleProbe loops`) measured AQE *helping* 1.2–2.0×
+    * (OPTIMIZATION_r17.md) measured AQE *helping* 1.2–2.0×
     * (q_components 2.05 s on vs 4.10 s off — runtime coalescing of the
     * per-round join shuffles is load-bearing there). Corpus-sized work
     * NEVER runs under this scope — callers flip it on around the

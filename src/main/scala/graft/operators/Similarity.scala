@@ -728,11 +728,11 @@ object Similarity {
     * (default 1/8), floored at `minProbe` so tiny indexes — where one
     * cell is a big corpus slice and cell boundaries cut off true
     * neighbors — keep recall (16 cells × 10 probes measured 0.90
-    * recall@10 at sf0.01, vs 0.80 at 8 probes; IvfTune). As cellsFor
-    * scales cells with n, the fraction probed falls from the floor-
-    * dominated 62% at n≈500 to the 12.5% target at n≥20k — scored rows
-    * per query stay ~occupancy·probes while the rest of the corpus is
-    * pruned by the index. On ISOTROPIC vectors recall tracks the probed
+    * recall@10 at sf0.01, vs 0.80 at 8 probes; tools/ivf_tune.json).
+    * As cellsFor scales cells with n, the fraction probed falls from
+    * the floor-dominated 62% at n≈500 to the 12.5% target at n≥20k —
+    * scored rows per query stay ~occupancy·probes while the rest of the
+    * corpus is pruned by the index. On ISOTROPIC vectors recall tracks the probed
     * fraction (there is no cluster structure to exploit — true for any
     * IVF); clustered corpora hold recall at the falling fraction, which
     * is the measured contrast in tools/ivf_tune.json.
@@ -821,9 +821,10 @@ object Similarity {
     * ~256 expected vectors per cell and probes are a bounded fraction of
     * cells, so the probed fraction FALLS as the corpus grows (62% at
     * n≈500, 12.5% from n≈20k) instead of a fixed 16-cell index probing
-    * ~62% of the corpus at any size. Tuning (IvfTune, recall@10 over 5
-    * queries vs brute force): random-corpus-vector centroids at 16
-    * cells/8 probes gave 0.70; the k-means fit lifts that to 0.80, and
+    * ~62% of the corpus at any size. Tuning (tools/ivf_tune.json,
+    * recall@10 over 5 queries vs brute force): random-corpus-vector
+    * centroids at 16 cells/8 probes gave 0.70; the k-means fit lifts
+    * that to 0.80, and
     * the derived 16/10 floor geometry reaches 0.90 at sf0.01. On
     * isotropic vectors recall necessarily tracks the probed fraction;
     * the clustered-corpus sweep in tools/ivf_tune.json shows the index
@@ -864,7 +865,8 @@ object Similarity {
     // Centroid assignment/probing via the NearestCentroids expression:
     // the matrix rides as a codegen reference object, so plan size and
     // generated-method size are O(1) in cell count — the literal-array
-    // form (kept below for the IvfTune comparison) blew past the JVM
+    // form (kept below as the reference path DedupSimilaritySpec
+    // checks this one against) blew past the JVM
     // 64 KB method limit at ~98 cells and dropped the stage to
     // interpreted eval. Both forms are bit-identical (pinned in
     // DedupSimilaritySpec, tie cases included).
@@ -1859,7 +1861,7 @@ object Similarity {
     *
     * Geometry: cells/probes derive from the corpus as in [[ivfTopK]];
     * `m`/`ksub` default to 16 subspaces × 16 codes with a 100-row
-    * refine shortlist — the PqTune sweep's sandbox optimum (recall@10
+    * refine shortlist — the r16 geometry sweep's optimum (recall@10
     * 0.90 at sf0.01, the plain-IVF probe ceiling; the near-isotropic
     * test embeddings need the finer subspace split, and the 500–2k-row
     * corpora can't fill 256-entry codebooks). Production geometry is

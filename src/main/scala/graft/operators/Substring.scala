@@ -33,8 +33,9 @@ import org.apache.spark.sql.functions._
   * the cap is deterministic (a pure frequency filter, mirrored verbatim
   * in the DuckDB oracle) and dormant at verify scale (max gram
   * frequency 3 at sf0.01). The doc-sized gram-array frame materializes
-  * ONCE before the explode (the r14 NoveltyProbe rule: exploding a
-  * computed HOF array re-pays the lambda chain per generator row, 5×),
+  * ONCE before the explode (the r14 novelty measurement behind
+  * [[Dedup]]'s shingle source: exploding a computed HOF array re-pays
+  * the lambda chain per generator row, 5×),
   * and once more after it, since the pair self-join consumes the
   * exploded positions twice. Collision note: pairing on xxhash64 can in
   * principle alias two distinct grams (p ≈ positions²/2⁶⁴); the oracle
@@ -59,7 +60,7 @@ object Substring {
   /** (h, doc_id, pos) gram-position tuples for `docs` — one per token
     * position, h = xxhash64 of the `minLen`-token window starting
     * there. The doc-sized gram-array frame materializes once before
-    * the explode (the r14 NoveltyProbe rule).
+    * the explode (the r14 novelty measurement).
     */
   private[operators] def positionsOf(docs: DataFrame,
       minLen: Int): DataFrame =

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.functions.Fns._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Serving read path + scheduled orchestration (SURVEY.md §3.2/§3.3 —
   * dashboard.py:1080-1159 and scheduler.py behavior only).
@@ -53,29 +54,37 @@ object Scheduler {
   /** §3.3: the three sync stages at their cadences, collapsed to a
     * deterministic batch loop (the streaming tier owns true continuous
     * execution; this is the scheduler-parity path, including the eager
-    * first run of every stage and catch-log-continue error handling).
-    * `ticks` bounds the loop for tests; each tick represents the
-    * scheduler's poll granularity.
+    * first run of every stage and catch-log-continue error handling:
+    * a failed stage is logged at WARN with its cause and counted, and
+    * the loop goes on). `ticks` bounds the loop for tests; each tick
+    * represents the scheduler's poll granularity. Returns the number
+    * of failed stage runs.
     */
   def runScheduled(spark: SparkSession, rawJsonPath: String,
       paths: Pipeline.Paths, ticks: Int,
       apiEveryTicks: Int = 1, warehouseEveryTicks: Int = 2,
       cacheEveryTicks: Int = 1): Int = {
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
     var errors = 0
-    def guarded(stage: => Unit): Unit =
-      try stage catch { case scala.util.control.NonFatal(_) => errors += 1 }
     (0 until ticks).foreach { t =>
+      def guarded(stage: String)(body: => Unit): Unit =
+        try body catch {
+          case NonFatal(e) =>
+            errors += 1
+            log.warn(s"runScheduled: $stage stage failed at tick $t; " +
+              "continuing", e)
+        }
       // eager first run (t == 0) mirrors scheduler.py's startup pass
       if (t % apiEveryTicks == 0)
-        guarded(Pipeline.run(spark, rawJsonPath, paths))
+        guarded("api")(Pipeline.run(spark, rawJsonPath, paths))
       if (t % warehouseEveryTicks == 0)
-        guarded {
+        guarded("warehouse") {
           val o = Warehouse.readObservations(spark, paths.observations)
           Warehouse.refreshAggregate(Warehouse.dailyAggregates(o),
             paths.dailyAgg, 60, "incremental")
         }
       if (t % cacheEveryTicks == 0)
-        guarded(servingData(spark, paths, ttlSeconds = 3600))
+        guarded("cache")(servingData(spark, paths, ttlSeconds = 3600))
     }
     errors
   }

@@ -204,17 +204,30 @@ class IndexTableSpec extends SparkSuite {
     assert(contents(dir) === want)
   }
 
-  test("the staged-publish protocol has one home: no rename in the " +
-      "main sources outside IndexTable.scala") {
-    def files(f: File): Seq[File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-    val main = new File("src/main/scala")
-    assert(main.isDirectory)
-    val offenders = files(main)
-      .filter(f => f.getName.endsWith(".scala") &&
-        f.getName != "IndexTable.scala")
-      .filter(f => java.nio.file.Files.readString(f.toPath)
-        .contains(".rename("))
-    assert(offenders.isEmpty, offenders.mkString(", "))
+  // Source guards: each pattern may appear in the main sources only in
+  // its allowed files (paths under src/main/scala). They read source
+  // text and start no Spark job.
+  Seq(
+    ("the staged-publish protocol has one home: no rename in the " +
+      "main sources outside IndexTable.scala",
+      ".rename(", Set("graft/operators/IndexTable.scala")),
+    ("one session factory: no SparkSession builder in the main " +
+      "sources outside Session.scala and Bench.scala",
+      "SparkSession.builder(",
+      Set("graft/Session.scala", "graft/Bench.scala"))
+  ).foreach { case (name, pattern, allowed) =>
+    test(name) {
+      def files(f: File): Seq[File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+      val main = new File("src/main/scala")
+      assert(main.isDirectory)
+      val offenders = files(main)
+        .filter(_.getName.endsWith(".scala"))
+        .map(f => main.toPath.relativize(f.toPath).toString -> f)
+        .filter { case (rel, f) => !allowed(rel) &&
+          java.nio.file.Files.readString(f.toPath).contains(pattern) }
+        .map(_._1)
+      assert(offenders.isEmpty, offenders.mkString(", "))
+    }
   }
 }

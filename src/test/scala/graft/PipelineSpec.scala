@@ -1,6 +1,10 @@
 package graft
 
 import graft.pipeline._
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions._
 
 /** End-to-end weather pipeline on the §1.1 fixture docs: raw JSON →
@@ -171,10 +175,39 @@ class PipelineSpec extends SparkSuite {
     // two API syncs ran → re-extract-all duplication (2 docs → 6 + 12)
     assert(Warehouse.readObservations(spark, paths.observations)
       .count() === 18)
-    // bad input path → errors counted, loop continues
-    val bad = Scheduler.runScheduled(spark,
-      s"$fixtureDir/missing.json", paths, ticks = 2)
+    // bad input path → errors counted, each logged at WARN with its
+    // stage, tick and cause, loop continues. The capture sits on the
+    // root config: Logger.addAppender would leave a non-additive config
+    // behind that silences the Scheduler logger for the rest of the JVM.
+    val logged = collection.mutable.ArrayBuffer.empty[(Level, String,
+      Throwable)]
+    val capture = new AbstractAppender("scheduler-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == Scheduler.getClass.getName)
+          logged.synchronized {
+            logged += ((e.getLevel, e.getMessage.getFormattedMessage,
+              e.getThrown))
+          }
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    val bad =
+      try Scheduler.runScheduled(spark,
+        s"$fixtureDir/missing.json", paths, ticks = 2)
+      finally {
+        root.removeAppender(capture.getName)
+        ctx.updateLoggers()
+        capture.stop()
+      }
     assert(bad === 2)
+    // the API stage fails on both ticks; warehouse and cache still run
+    assert(logged.map(r => (r._1, r._2)).toSeq === Seq(0, 1).map(t =>
+      (Level.WARN, s"runScheduled: api stage failed at tick $t; continuing")))
+    assert(logged.forall(_._3.getMessage.contains("missing.json")))
   }
 
   test("late-arriving batch lands in earlier days after recompute (ST4)") {

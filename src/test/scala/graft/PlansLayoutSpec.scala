@@ -1,53 +1,10 @@
 package graft
 
-import graft.operators.Similarity
-import graft.plans.FuseCosineRule
 import graft.sources.Layout
 import org.apache.spark.sql.functions._
 
-/** Extensions rule + storage-layout tests. The rule is applied through
-  * `experimental.extraOptimizations` (equivalent injection point to
-  * `SparkSessionExtensions.injectOptimizerRule`) because the shared
-  * test JVM may already hold a session — `getOrCreate` would silently
-  * ignore `withExtensions`.
-  */
+/** Storage-layout tests. */
 class PlansLayoutSpec extends SparkSuite {
-
-  test("FuseCosineRule rewrites composed cosine to the fused expression") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ FuseCosineRule
-    try {
-      val emb = Tables.embeddings(spark, sf())
-      val composed = emb.select(col("vec_id"),
-        Similarity.cosine(col("embedding"), col("embedding")).as("c"))
-      val optimized = composed.queryExecution.optimizedPlan
-      assert(optimized.toString.contains("fused_cosine"),
-        s"rule did not fire:\n$optimized")
-      // and it still evaluates correctly
-      composed.collect().foreach(r =>
-        assert(math.abs(r.getDouble(1) - 1.0) < 1e-12))
-      // non-matching shapes are untouched
-      val notCosine = emb.select(
-        (Similarity.dot(col("embedding"), col("embedding")) / 2).as("x"))
-      assert(!notCosine.queryExecution.optimizedPlan.toString
-        .contains("fused_cosine"))
-      // an ANSI divide (plain `/` under Spark 4's default mode) keeps
-      // its divide-by-zero ERROR semantics — the fused kernel returns
-      // null there, so fusing it would swallow errors. Guards the
-      // NumericEvalContext.evalMode check: comparing the context
-      // itself to an EvalMode was always-true and fused this shape.
-      val ansiComposed = emb.select(
-        (Similarity.dot(col("embedding"), col("embedding")) /
-          (Similarity.norm(col("embedding")) *
-            Similarity.norm(col("embedding")))).as("c"))
-      assert(!ansiComposed.queryExecution.optimizedPlan.toString
-        .contains("fused_cosine"),
-        "ANSI divide must not be rewritten to the null-returning kernel")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == FuseCosineRule)
-    }
-  }
 
   test("bucketed tables join without a shuffle exchange") {
     Seq("orders_b", "lineitem_b").foreach { t =>

@@ -267,8 +267,8 @@ class PqSpec extends SparkSuite {
       f"refined(100)=$refinedRecall%.2f")
     // ADC ranks from 16-byte codes alone — information-bounded on the
     // near-isotropic test embeddings; the two-tier refine must recover
-    // the uncompressed family floor (PqTune sweep: 0.90, the plain-IVF
-    // probe ceiling, at the m=16/ksub=16/refine=100 defaults)
+    // the uncompressed family floor (r16 geometry sweep: 0.90, the
+    // plain-IVF probe ceiling, at the m=16/ksub=16/refine=100 defaults)
     AccuracyLedger.assertAtLeast("ann_ivfpq_refined_recall_at_10",
       refinedRecall, 0.75)
     assert(refinedRecall >= adcRecall,

@@ -104,8 +104,7 @@ class ScalarQuantSpec extends SparkSuite {
     assert(audit.exceptAll(fresh).isEmpty && fresh.exceptAll(audit).isEmpty)
   }
 
-  test("fused_int8_cosine is SQL-callable and GraftExtensions wires " +
-      "both fused kernels") {
+  test("fused_int8_cosine is SQL-callable") {
     graft.functions.FusedInt8Cosine.register(spark)
     val r = spark.sql(
       "SELECT fused_int8_cosine(" +
@@ -113,10 +112,6 @@ class ScalarQuantSpec extends SparkSuite {
         "array(cast(3.0 as float), cast(4.0 as float))) AS s")
       .collect()(0).getDouble(0)
     assert(math.abs(r - 1.0) < 1e-12)
-    // the extension entry point must inject cleanly (cluster deploys
-    // load it via spark.sql.extensions, outside any test session)
-    val e = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(e)
   }
 
   test("delete lifecycle: tombstoned vectors vanish from the serve " +

@@ -5,13 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite; UTC + small shuffle width. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
