@@ -33,9 +33,11 @@ object SparkEntry {
     queries("q_monthly_topk")(spark, "/root/testdata/sf0.001")
 
   /** Build-once prepare hook for the `*_served` queries: persists the
-    * lake indexes they read (see [[graft.registry.TextQueries.prepare]]).
-    * Runners (Verify, Bench, the audit mains) call this before
-    * executing registry queries; construction stays job-free.
+    * lake indexes they read (see [[graft.registry.TextQueries.prepare]])
+    * plus the bucketed, z-ordered, CDC and graph-edge lakes. Verify,
+    * VerifyOne, Bench, BenchOne, GoldenDump, ExplainPlans, PlanBudget
+    * and EntrySpec call this before executing registry queries;
+    * construction stays job-free.
     */
   def prepare(spark: SparkSession, sfDir: String): Unit = {
     graft.registry.TextQueries.prepare(spark, sfDir)

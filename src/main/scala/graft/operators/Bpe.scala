@@ -80,20 +80,16 @@ object Bpe {
     * distributed rounds stand unchanged (at 100 TB word types run to
     * ~10⁷ and the state no longer belongs on the driver). Gated by
     * count, not hope: the ceiling bounds driver memory at ~tens of MB.
-    * Override with spark.graft.bpe.localTrainMaxTypes (set 0 to force
-    * the distributed rounds — the A/B and BpeSpec's distributed-path
-    * coverage use this). The default applies only while the key is
-    * unset; a value that is not an integer is a configuration error,
-    * never a silent fallback.
     */
-  private val LocalTrainMaxTypesDefault = 262144L
+  private val LocalTrainMaxTypes = 262144L
 
-  private[operators] def localTrainMaxTypes(s: SparkSession): Long = {
-    val key = "spark.graft.bpe.localTrainMaxTypes"
-    s.conf.getOption(key).fold(LocalTrainMaxTypesDefault)(v =>
-      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"$key must be an integer count of word types, got '$v'")))
-  }
+  /** The ceiling in force on this thread: [[LocalTrainMaxTypes]] unless
+    * a caller scopes another with `withValue` — `withValue(0)` forces
+    * the distributed rounds, BpeSpec's local-vs-distributed parity
+    * case. A code seam, not a setting.
+    */
+  private[graft] val localTrainMaxTypes =
+    new scala.util.DynamicVariable[Long](LocalTrainMaxTypes)
 
   /** Whether a (word, syms) vocabulary may fold into ONE broadcast map
     * row — the gate of [[docTokenStats]] and `Substring.symbolStreams`.
@@ -105,7 +101,7 @@ object Bpe {
     */
   private[graft] def broadcastableVocab(vocab: DataFrame): Boolean = {
     val s = vocab.sparkSession
-    val maxTypes = localTrainMaxTypes(s)
+    val maxTypes = localTrainMaxTypes.value
     maxTypes > 0 && {
       val r = vocab.agg(count(lit(1)), coalesce(
           sum(length(col("word")) + size(col("syms")) * 8), lit(0L)))
@@ -294,9 +290,9 @@ object Bpe {
     // driver-local fast path (r18): below the type ceiling the rounds
     // are scheduling overhead, not data — collect the checkpointed
     // (word, freq) table (one vocabulary-sized job) and run the
-    // identical loop in-process. See LocalTrainMaxTypesDefault.
+    // identical loop in-process. See LocalTrainMaxTypes.
     val nTypes = state.count()
-    val localMax = localTrainMaxTypes(s)
+    val localMax = localTrainMaxTypes.value
     if (localMax > 0 && nTypes <= localMax) {
       val wf = state.select("word", "freq").collect()
         .map(r => (r.getString(0), r.getLong(1)))
@@ -448,7 +444,8 @@ object Bpe {
     // collect the distinct words and replay the frozen merges
     // in-process instead of scheduling nMerges fold rounds
     val s0 = vocab.sparkSession
-    if (localTrainMaxTypes(s0) > 0 && nTypes <= localTrainMaxTypes(s0)) {
+    val localMax = localTrainMaxTypes.value
+    if (localMax > 0 && nTypes <= localMax) {
       val rows: Seq[Row] = vocab.select("word").collect()
         .toIndexedSeq.map { r =>
           val w = r.getString(0)

@@ -47,12 +47,11 @@ object Graph {
     if (sys.props.get("graft.audit.noCheckpoint").contains("true")) df
     else df.localCheckpoint()
 
-  /** Five damped integer PageRank iterations over the distinct
-    * customer→supplier edges; emits every node's exact scaled rank.
-    */
-  /** Per-node triangle participation counts over the co-purchase item
-    * graph — the local-clustering primitive (community density,
-    * spam-farm detection) next to [[pageRank]]'s global authority.
+  /** Per-node triangle participation counts over any canonical
+    * (p1 < p2) undirected edge list — the registry passes the
+    * co-purchase item graph prepare persisted. The local-clustering
+    * primitive (community density, spam-farm detection) next to
+    * [[pageRank]]'s global authority.
     *
     * Algorithm: degree-ordered wedge counting (Suri & Vassilvitskii,
     * "Counting Triangles and the Curse of the Last Reducer", WWW'11).
@@ -66,18 +65,11 @@ object Graph {
     * edge self-join quadratic emits almost no wedges because nearly
     * all its edges point INTO it. Both joins are plain equi-shuffles
     * on node keys; nothing is broadcast or collected.
-    */
-  def triangleCounts(s: SparkSession, d: String,
-      minSupport: Long = 2): DataFrame =
-    triangleCountsOfEdges(Relational.coPurchase(s, d, minSupport)
-      .select(col("p1"), col("p2")))
-
-  /** The wedge-counting core over any canonical (p1 < p2) undirected
-    * edge list (testing seam, same convention as [[pageRankEdges]]).
+    *
     * The edge list and the oriented view are each referenced several
     * times downstream (degrees, both wedge sides, the closing probe) —
     * materialized once via the same lineage cut as the PageRank
-    * rounds, so the co-purchase subtree is computed once, not per
+    * rounds, so the edge subtree is computed once, not per
     * reference.
     */
   def triangleCountsOfEdges(edgesIn: DataFrame): DataFrame = {
@@ -204,11 +196,12 @@ object Graph {
     dist
   }
 
-  /** Connected components of the co-purchase graph: every node
-    * labelled with the minimum node id of its component — the global
-    * clustering primitive next to [[triangleCountsOfEdges]]'s local
-    * one (the relational twin of [[Dedup]]'s star-contraction over
-    * near-dup edges).
+  /** Connected components of any canonical (p1 < p2) undirected edge
+    * list — the registry passes the co-purchase graph prepare
+    * persisted. Every node is labelled with the minimum node id of its
+    * component: the global clustering primitive next to
+    * [[triangleCountsOfEdges]]'s local one (the relational twin of
+    * [[Dedup]]'s star-contraction over near-dup edges).
     *
     * Min-label propagation to fixpoint: each round pushes labels one
     * hop (edges are pre-materialized both ways) and keeps the
@@ -224,17 +217,9 @@ object Graph {
     * propagation — the alternating star-contraction in Dedup is the
     * O(log n)-round variant; this one is the simpler, join-lighter
     * choice for the small-diameter graphs co-occurrence produces.
-    */
-  def connectedComponents(s: SparkSession, d: String,
-      minSupport: Long = 2, maxRounds: Int = 30): DataFrame = {
-    val e = cut(Relational.coPurchase(s, d, minSupport)
-      .select(col("p1"), col("p2")))
-    componentsOfEdges(e, maxRounds)
-  }
-
-  /** The propagation core over any canonical (p1 < p2) undirected
-    * edge list (testing seam). Unlike [[pageRankEdges]]'s fixed-round
-    * loop, convergence here needs an ACTION per round, so the cuts
+    *
+    * Unlike [[pageRankEdges]]'s fixed-round loop, convergence here
+    * needs an ACTION per round, so the cuts
     * are unconditional `localCheckpoint`s (the Bpe-loop convention,
     * NOT the audit-transparent [[cut]]): without them each round's
     * convergence job would re-execute exponentially deep uncut
@@ -271,6 +256,9 @@ object Graph {
     lab
   }
 
+  /** Five damped integer PageRank iterations over the distinct
+    * customer→supplier edges; emits every node's exact scaled rank.
+    */
   def pageRank(s: SparkSession, d: String, iters: Int = 5): DataFrame =
     pageRankEdges(bipartiteEdges(s, d), iters)
 

@@ -47,16 +47,6 @@ object Serving {
       r4(avg(col("avg_humidity_percent"))).as("avg_humidity_percent"),
       count(lit(1)).as("period_months"))
 
-  /** T5: chart-ready ascending re-sort of a latest-N serving result
-    * (the reference's client re-sorts desc-limited series for plotting).
-    */
-  def chartSeries(df: DataFrame, timeCols: String*): DataFrame =
-    df.orderBy(timeCols.map(col): _*)
-
-  /** F4: display conversion added to a serving result. */
-  def withFahrenheit(df: DataFrame): DataFrame =
-    df.withColumn("avg_temperature_f", cToF(col("avg_temperature_c")))
-
   /** F13/F14/F10: the cache envelope — one JSON blob per refresh, with
     * version + timestamp, exactly the reference's Redis value shape.
     */

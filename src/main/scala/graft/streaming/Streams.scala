@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.pipeline.Warehouse
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming tier (SURVEY.md §2.9 ST1–ST7): the reference's
   * micro-batch scheduler cadence, incremental loads, late-data backfill
@@ -19,7 +18,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   *  - ST4: a 7-day watermark bounds state exactly like the reference's
   *    7-day historical backfill window.
   *  - ST5: `dropDuplicatesWithinWatermark` on the observation key.
-  *  - ST6: state TTL via GroupState timeouts.
+  *  - ST6: the cache TTL stays a batch freshness probe
+  *    (`Serving.readCacheIfFresh`).
   */
 object Streams {
 
@@ -563,6 +563,45 @@ object Streams {
     Seq("documents", "buckets", "pairs").foreach(t =>
       graft.operators.IndexTable.compactRange(s, lakeDir, t, upToBatch))
 
+  /** The staging shared by the four driver-gate snapshots: clear
+    * `outDir` and `checkpoint`, stage the single events file into
+    * `<outDir>__stage` (the file stream source wants a DIRECTORY of
+    * arriving files), open the normalized events stream, and run
+    * `query` over it as one checkpointed AvailableNow `foreachBatch`
+    * write in `mode`: Complete overwrites the snapshot with each
+    * batch's full state, Append appends each micro-batch's rows.
+    */
+  private def eventsSnapshot(s: SparkSession, d: String, outDir: String,
+      checkpoint: String, mode: OutputMode)(
+      query: DataFrame => DataFrame): Unit = {
+    import org.apache.hadoop.fs.Path
+    val conf = s.sparkContext.hadoopConfiguration
+    val fs = new Path(outDir).getFileSystem(conf)
+    fs.delete(new Path(outDir), true)
+    fs.delete(new Path(checkpoint), true)
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val eventsFile = s"$d/events.parquet"
+    val stage = new Path(s"${outDir}__stage")
+    fs.delete(stage, true)
+    fs.mkdirs(stage)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(eventsFile), fs,
+      new Path(stage, "events.parquet"), false, conf)
+    val ev = graft.Tables.normalizeEvents(
+      s.readStream.schema(s.read.parquet(eventsFile).schema)
+        .parquet(stage.toString))
+    val writeMode =
+      if (mode == OutputMode.Complete()) "overwrite" else "append"
+    query(ev).writeStream
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(writeMode).parquet(outDir); ()
+      }
+      .start()
+      .awaitTermination()
+  }
+
   /** The driver-gate streaming row (`q_stream_hourly`): run the
     * tumbling-window hourly aggregate over the events table as a real
     * Structured Streaming query (`Trigger.AvailableNow`, checkpointed
@@ -578,44 +617,17 @@ object Streams {
     * not the 100 TB posture.
     */
   def hourlyEventsSnapshot(s: SparkSession, d: String, outDir: String,
-      checkpoint: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs =
-      new Path(outDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(outDir), true)
-    fs.delete(new Path(checkpoint), true)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the file stream source wants a DIRECTORY of arriving files:
-    // stage the single events file into one (the specs' pattern)
-    val eventsFile = s"$d/events.parquet"
-    val stage = new Path(s"${outDir}__stage")
-    fs.delete(stage, true)
-    fs.mkdirs(stage)
-    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(eventsFile), fs,
-      new Path(stage, "events.parquet"), false,
-      s.sparkContext.hadoopConfiguration)
-    val ev = graft.Tables.normalizeEvents(
-      s.readStream.schema(s.read.parquet(eventsFile).schema)
-        .parquet(stage.toString))
-    val agg = ev.filter(col("value").isNotNull)
-      .groupBy(window(col("ts_event"), "1 hour"))
-      .agg(
-        avg(col("value")).as("avg_value"),
-        max(col("value")).as("max_value"),
-        min(col("value")).as("min_value"),
-        count(lit(1)).as("n_obs"))
-      .select(col("window.start").as("hour_start"), col("avg_value"),
-        col("max_value"), col("min_value"), col("n_obs"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(outDir); ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    eventsSnapshot(s, d, outDir, checkpoint, OutputMode.Complete())(ev =>
+      ev.filter(col("value").isNotNull)
+        .groupBy(window(col("ts_event"), "1 hour"))
+        .agg(
+          avg(col("value")).as("avg_value"),
+          max(col("value")).as("max_value"),
+          min(col("value")).as("min_value"),
+          count(lit(1)).as("n_obs"))
+        .select(col("window.start").as("hour_start"), col("avg_value"),
+          col("max_value"), col("min_value"), col("n_obs")))
 
   /** The second driver-gate streaming row (`q_stream_sessions`):
     * Spark's native SESSION WINDOWS (`session_window`, gap-merged
@@ -635,43 +647,16 @@ object Streams {
     * state only for open sessions.
     */
   def sessionEventsSnapshot(s: SparkSession, d: String, outDir: String,
-      checkpoint: String, gapMinutes: Int = 30): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs =
-      new Path(outDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(outDir), true)
-    fs.delete(new Path(checkpoint), true)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val eventsFile = s"$d/events.parquet"
-    val stage = new Path(s"${outDir}__stage")
-    fs.delete(stage, true)
-    fs.mkdirs(stage)
-    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(eventsFile), fs,
-      new Path(stage, "events.parquet"), false,
-      s.sparkContext.hadoopConfiguration)
-    val ev = graft.Tables.normalizeEvents(
-      s.readStream.schema(s.read.parquet(eventsFile).schema)
-        .parquet(stage.toString))
-    val agg = ev
-      .groupBy(col("user_id"),
-        session_window(col("ts_event"),
-          s"$gapMinutes minutes 1 microsecond"))
-      .agg(count(lit(1)).as("n_events"),
-        min(col("event_id")).as("first_event_id"),
-        sum(col("value")).as("session_value"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("n_events"), col("first_event_id"), col("session_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(outDir); ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    eventsSnapshot(s, d, outDir, checkpoint, OutputMode.Complete())(ev =>
+      ev.groupBy(col("user_id"),
+          session_window(col("ts_event"), "30 minutes 1 microsecond"))
+        .agg(count(lit(1)).as("n_events"),
+          min(col("event_id")).as("first_event_id"),
+          sum(col("value")).as("session_value"))
+        .select(col("user_id"),
+          col("session_window.start").as("session_start"),
+          col("n_events"), col("first_event_id"), col("session_value")))
 
   /** Tumbling-window hourly aggregate with late-data tolerance — the
     * streaming twin of Warehouse.hourlyAggregates (same metric mix).
@@ -714,39 +699,6 @@ object Streams {
         }
       }
       .start()
-
-  /** Session state for the TTL-cache analog (ST6). */
-  final case class CacheState(payload: String, updatedAtMs: Long)
-  final case class KeyedValue(key: String, payload: String, tsMs: Long)
-  final case class CacheAnswer(key: String, payload: Option[String],
-    fresh: Boolean)
-
-  /** ST6 as a stateful operator: a keyed cache whose entries expire via
-    * processing-time timeout — the Redis `setex`/`ttl` behavior inside
-    * the engine. Input is a stream of cache writes; output reports
-    * freshness transitions (expired keys emit `fresh = false`).
-    */
-  def ttlCache(writes: Dataset[KeyedValue], ttlMs: Long)
-      : Dataset[CacheAnswer] = {
-    import writes.sparkSession.implicits._
-    writes.groupByKey(_.key)
-      .mapGroupsWithState[CacheState, CacheAnswer](
-        GroupStateTimeout.ProcessingTimeTimeout) {
-        (key: String, values: Iterator[KeyedValue],
-         state: GroupState[CacheState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            CacheAnswer(key, None, fresh = false)
-          } else {
-            val latest = values.toSeq.maxByOption(_.tsMs)
-            latest.foreach { v =>
-              state.update(CacheState(v.payload, v.tsMs))
-              state.setTimeoutDuration(ttlMs)
-            }
-            CacheAnswer(key, state.getOption.map(_.payload), fresh = true)
-          }
-      }
-  }
 
   /** Sliding windows: 1-hour windows advancing every 15 minutes — each
     * event lands in 4 windows. State is bounded by the watermark.
@@ -808,40 +760,15 @@ object Streams {
     * [[hourlyEventsSnapshot]].
     */
   def slidingEventsSnapshot(s: SparkSession, d: String, outDir: String,
-      checkpoint: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs =
-      new Path(outDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(outDir), true)
-    fs.delete(new Path(checkpoint), true)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val eventsFile = s"$d/events.parquet"
-    val stage = new Path(s"${outDir}__stage")
-    fs.delete(stage, true)
-    fs.mkdirs(stage)
-    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(eventsFile), fs,
-      new Path(stage, "events.parquet"), false,
-      s.sparkContext.hadoopConfiguration)
-    val ev = graft.Tables.normalizeEvents(
-      s.readStream.schema(s.read.parquet(eventsFile).schema)
-        .parquet(stage.toString))
-    val agg = ev.filter(col("value").isNotNull)
-      .groupBy(window(col("ts_event"), "2 hours", "1 hour"))
-      .agg(avg(col("value")).as("avg_value"),
-        max(col("value")).as("max_value"),
-        count(lit(1)).as("n_obs"))
-      .select(col("window.start").as("window_start"), col("avg_value"),
-        col("max_value"), col("n_obs"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(outDir); ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    eventsSnapshot(s, d, outDir, checkpoint, OutputMode.Complete())(ev =>
+      ev.filter(col("value").isNotNull)
+        .groupBy(window(col("ts_event"), "2 hours", "1 hour"))
+        .agg(avg(col("value")).as("avg_value"),
+          max(col("value")).as("max_value"),
+          count(lit(1)).as("n_obs"))
+        .select(col("window.start").as("window_start"), col("avg_value"),
+          col("max_value"), col("n_obs")))
 
   /** The third driver-gate streaming row (`q_stream_join`): the
     * STREAM-STREAM interval join ([[purchaseAttribution]]: purchases
@@ -856,33 +783,9 @@ object Streams {
     * fresh-checkpoint re-run contract is delete-and-rebuild.
     */
   def attributionSnapshot(s: SparkSession, d: String, outDir: String,
-      checkpoint: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs =
-      new Path(outDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(outDir), true)
-    fs.delete(new Path(checkpoint), true)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val eventsFile = s"$d/events.parquet"
-    val stage = new Path(s"${outDir}__stage")
-    fs.delete(stage, true)
-    fs.mkdirs(stage)
-    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(eventsFile), fs,
-      new Path(stage, "events.parquet"), false,
-      s.sparkContext.hadoopConfiguration)
-    val ev = graft.Tables.normalizeEvents(
-      s.readStream.schema(s.read.parquet(eventsFile).schema)
-        .parquet(stage.toString))
-    val q = purchaseAttribution(ev).writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir); ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    eventsSnapshot(s, d, outDir, checkpoint, OutputMode.Append())(
+      purchaseAttribution)
 
   /** Events-table stream twin of Hierarchy.hourly for the testdata:
     * hour-windowed value aggregates with watermark.

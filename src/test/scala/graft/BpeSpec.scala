@@ -72,7 +72,6 @@ class BpeSpec extends SparkSuite {
         Seq.fill(2)("lower").mkString(" ")),
       (2L, Seq.fill(6)("newest").mkString(" ") + " " +
         Seq.fill(3)("widest").mkString(" "))))
-    val key = "spark.graft.bpe.localTrainMaxTypes"
     def run(): (Seq[(Int, String, String, Long)],
         Seq[(String, Long, Seq[String])], Seq[(String, Seq[String])],
         Seq[(Long, Long, String)]) = {
@@ -96,9 +95,8 @@ class BpeSpec extends SparkSuite {
       (ms, vocab, replayed, scrubbed)
     }
     val local = run() // tiny corpus: under the default gate
-    spark.conf.set(key, "0") // force the distributed rounds
-    val dist =
-      try run() finally spark.conf.unset(key)
+    // a zero ceiling forces the distributed rounds
+    val dist = Bpe.localTrainMaxTypes.withValue(0L)(run())
     assert(local._1 === dist._1)
     assert(local._2 === dist._2)
     assert(local._3 === dist._3)
@@ -136,18 +134,6 @@ class BpeSpec extends SparkSuite {
       } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(mapped._1.nonEmpty)
     assert(mapped === joined)
-  }
-
-  test("an unparseable localTrainMaxTypes is a configuration error " +
-      "naming the key, not a silent fallback to the default gate") {
-    val d = plant(Seq((1L, "ab ab")))
-    val key = "spark.graft.bpe.localTrainMaxTypes"
-    spark.conf.set(key, "256k")
-    val e =
-      try intercept[IllegalArgumentException](
-        Bpe.merges(spark, d, nMerges = 1).collect())
-      finally spark.conf.unset(key)
-    assert(e.getMessage.contains(key))
   }
 
   test("frozen-model apply: persisted merges encode UNSEEN words by " +

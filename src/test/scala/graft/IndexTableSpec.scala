@@ -214,7 +214,10 @@ class IndexTableSpec extends SparkSuite {
     ("one session factory: no SparkSession builder in the main " +
       "sources outside Session.scala and Bench.scala",
       "SparkSession.builder(",
-      Set("graft/Session.scala", "graft/Bench.scala"))
+      Set("graft/Session.scala", "graft/Bench.scala")),
+    ("no spark.graft.* conf key in the main sources: tuning is a code " +
+      "constant, never a session setting",
+      "\"spark.graft.", Set.empty[String])
   ).foreach { case (name, pattern, allowed) =>
     test(name) {
       def files(f: File): Seq[File] =
