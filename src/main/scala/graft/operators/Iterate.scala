@@ -32,12 +32,6 @@ object Iterate {
     * checkpoint.
     */
   def withoutAqe[T](s: SparkSession)(body: => T): T = {
-    // probe/audit escape: `-Dgraft.iterate.keepAqe=true` runs the body
-    // under the session's AQE setting unchanged, so an A/B probe can
-    // measure the scope's effect inside one JVM (host noise makes
-    // cross-JVM comparisons useless — the r17 loops probe)
-    if (sys.props.get("graft.iterate.keepAqe").contains("true"))
-      return body
     val key = "spark.sql.adaptive.enabled"
     val prev = s.conf.get(key, "true")
     s.conf.set(key, "false")

@@ -34,22 +34,44 @@ object Pipeline {
     // Stage 2: lake→warehouse (parity mode re-extracts everything, like
     // the reference; checkpointed incremental reads live in the
     // streaming tier)
-    val docs = spark.read.schema(
-      spark.read.parquet(paths.enriched).schema)
-      .parquet(paths.enriched)
+    val docs = spark.read.schema(enriched.schema).parquet(paths.enriched)
     val obs = Warehouse.parseObservations(docs)
     Warehouse.writeObservations(obs, paths.observations, loadMode)
 
+    // Stage 2 aggregates + stage 3 warehouse→serving cache, from one
+    // rollup
     val allObs = Warehouse.readObservations(spark, paths.observations)
-    Warehouse.refreshAggregate(
-      Warehouse.dailyAggregates(allObs), paths.dailyAgg, 60, loadMode)
-    Warehouse.refreshAggregate(
-      Warehouse.monthlyAggregates(allObs), paths.monthlyAgg, 60, loadMode)
+    publishRollup(allObs, Some((paths.dailyAgg, paths.monthlyAgg)),
+      Some(paths.cache), loadMode)
+    Serving.monthlyAverages(allObs, 12)
+  }
 
-    // Stage 3: warehouse→serving cache
-    val monthly = Serving.monthlyAverages(allObs, 12)
-    val overall = Serving.overallAverages(monthly)
-    Serving.writeCache(Serving.cacheEnvelope(monthly, overall), paths.cache)
-    monthly
+  /** Compute the hourly→daily→monthly rollup (SURVEY A2→A4) of `obs`
+    * once and publish from it: the daily and monthly aggregate tables
+    * (A8/A9) when `tables` names their paths, and the serving envelope
+    * of the latest 12 months (ST6) when `cache` names its path. Both
+    * rollups stay persisted for the call, so `refreshAggregate`'s
+    * `rows_loaded` count, the table writes and the envelope's two scans
+    * of the months all read the cached rows instead of aggregating the
+    * observations again.
+    */
+  def publishRollup(obs: DataFrame, tables: Option[(String, String)],
+      cache: Option[String], loadMode: String = "incremental"): Unit = {
+    val daily = Warehouse.dailyAggregates(obs).persist()
+    val monthly = Warehouse.monthlyRollup(daily).persist()
+    try {
+      tables.foreach { case (dailyPath, monthlyPath) =>
+        Warehouse.refreshAggregate(daily, dailyPath, 60, loadMode)
+        Warehouse.refreshAggregate(monthly, monthlyPath, 60, loadMode)
+      }
+      cache.foreach { path =>
+        val latest = Serving.latestMonths(monthly, 12)
+        Serving.writeCache(
+          Serving.cacheEnvelope(latest, Serving.overallAverages(latest)), path)
+      }
+    } finally {
+      monthly.unpersist()
+      daily.unpersist()
+    }
   }
 }

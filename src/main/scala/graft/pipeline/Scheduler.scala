@@ -57,8 +57,12 @@ object Scheduler {
     * first run of every stage and catch-log-continue error handling:
     * a failed stage is logged at WARN with its cause and counted, and
     * the loop goes on). `ticks` bounds the loop for tests; each tick
-    * represents the scheduler's poll granularity. Returns the number
-    * of failed stage runs.
+    * represents the scheduler's poll granularity. The `warehouse`
+    * stage refreshes the daily and monthly tables and the `cache`
+    * stage publishes the envelope, each from the warehouse's
+    * observations; a tick whose `api` stage completed skips both, since
+    * its full pass has just published all three from the same rows.
+    * Returns the number of failed stage runs.
     */
   def runScheduled(spark: SparkSession, rawJsonPath: String,
       paths: Pipeline.Paths, ticks: Int,
@@ -67,24 +71,27 @@ object Scheduler {
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     var errors = 0
     (0 until ticks).foreach { t =>
-      def guarded(stage: String)(body: => Unit): Unit =
-        try body catch {
+      def guarded(stage: String)(body: => Unit): Boolean =
+        try { body; true } catch {
           case NonFatal(e) =>
             errors += 1
             log.warn(s"runScheduled: $stage stage failed at tick $t; " +
               "continuing", e)
+            false
         }
+      def fromWarehouse(tables: Option[(String, String)],
+          cache: Option[String]): Unit =
+        Pipeline.publishRollup(
+          Warehouse.readObservations(spark, paths.observations),
+          tables, cache)
       // eager first run (t == 0) mirrors scheduler.py's startup pass
-      if (t % apiEveryTicks == 0)
+      val synced = t % apiEveryTicks == 0 &&
         guarded("api")(Pipeline.run(spark, rawJsonPath, paths))
-      if (t % warehouseEveryTicks == 0)
-        guarded("warehouse") {
-          val o = Warehouse.readObservations(spark, paths.observations)
-          Warehouse.refreshAggregate(Warehouse.dailyAggregates(o),
-            paths.dailyAgg, 60, "incremental")
-        }
-      if (t % cacheEveryTicks == 0)
-        guarded("cache")(servingData(spark, paths, ttlSeconds = 3600))
+      if (!synced && t % warehouseEveryTicks == 0)
+        guarded("warehouse")(
+          fromWarehouse(Some((paths.dailyAgg, paths.monthlyAgg)), None))
+      if (!synced && t % cacheEveryTicks == 0)
+        guarded("cache")(fromWarehouse(None, Some(paths.cache)))
     }
     errors
   }

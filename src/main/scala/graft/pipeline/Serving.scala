@@ -20,7 +20,11 @@ object Serving {
     * read time only.
     */
   def monthlyAverages(obs: DataFrame, months: Int): DataFrame =
-    Warehouse.monthlyAggregates(obs)
+    latestMonths(Warehouse.monthlyAggregates(obs), months)
+
+  /** T2 + F5 over already-computed monthly rows. */
+  def latestMonths(monthly: DataFrame, months: Int): DataFrame =
+    monthly
       .withColumn("avg_humidity_percent",
         capHumidity(col("avg_humidity_percent")))
       .orderBy(col("year").desc, col("month").desc)
@@ -80,7 +84,7 @@ object Serving {
   def readCacheIfFresh(spark: SparkSession, path: String,
       ttlSeconds: Int): Option[String] = {
     try {
-      val fresh = spark.read.parquet(path)
+      val fresh = spark.read.schema(WeatherSchemas.cacheEntry).parquet(path)
         .filter(col("cache_timestamp") >
           current_timestamp() - expr(s"INTERVAL $ttlSeconds SECONDS"))
         .select(col("payload"))

@@ -113,8 +113,11 @@ object Warehouse {
       .write.partitionBy("obs_date").mode(mode).parquet(path)
   }
 
+  /** Read with the known schema: no footer-inference job per read. A
+    * missing path still throws `AnalysisException`.
+    */
   def readObservations(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(WeatherSchemas.observation).parquet(path)
 
   /** S13 done surgically: delete observation rows by key, rewriting
     * ONLY the date partitions that contain a match (dynamic partition
@@ -198,9 +201,15 @@ object Warehouse {
         min(col("min_temperature_c")).as("min_temperature_c"),
         sum(col("observation_count")).as("observation_count"))
 
-  /** A4: monthly rollup over the daily rollup. */
+  /** A4: monthly rollup over observation rows. */
   def monthlyAggregates(obs: DataFrame): DataFrame =
-    dailyAggregates(obs)
+    monthlyRollup(dailyAggregates(obs))
+
+  /** A4 from already-computed daily rows, so one daily rollup can feed
+    * both tables.
+    */
+  def monthlyRollup(daily: DataFrame): DataFrame =
+    daily
       .groupBy(year(col("date")).as("year"), month(col("date")).as("month"))
       .agg(
         avg(col("avg_temperature_c")).as("avg_temperature_c"),

@@ -10,6 +10,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * what `spark.read.schema(...).json` needs to skip inference (a full
   * extra pass over the data at 100 TB) and to keep column pruning
   * effective — Spark only materializes the struct fields a query touches.
+  * The warehouse and cache schemas do the same for the parquet tiers: a
+  * read that passes them runs no footer-inference job.
   */
 object WeatherSchemas {
 
@@ -58,12 +60,20 @@ object WeatherSchemas {
     """date STRING, max_temp_c DOUBLE, min_temp_c DOUBLE, precip_mm DOUBLE
       |""".stripMargin).asInstanceOf[StructType]
 
-  /** Warehouse observation row (SURVEY §1.2 weather_observations). */
+  /** Warehouse observation row (SURVEY §1.2 weather_observations), in
+    * the order `Warehouse.parseObservations` writes it, then the
+    * `obs_date` partition column.
+    */
   val observation: StructType = DataType.fromDDL(
-    """observation_id STRING, station_id STRING, timestamp TIMESTAMP,
+    """timestamp TIMESTAMP, station_id STRING,
       |temperature_c DOUBLE, rainfall_mm DOUBLE, humidity_percent DOUBLE,
       |wind_speed_ms DOUBLE, pressure_pa DOUBLE,
-      |ingest_time_utc TIMESTAMP, source_timestamp TIMESTAMP,
-      |api_request_id STRING, etl_batch_id STRING
+      |source_timestamp TIMESTAMP, ingest_time_utc TIMESTAMP,
+      |api_request_id STRING, etl_batch_id STRING, observation_id STRING,
+      |obs_date DATE
       |""".stripMargin).asInstanceOf[StructType]
+
+  /** Serving cache row (`Serving.cacheEnvelope`). */
+  val cacheEntry: StructType = DataType.fromDDL(
+    "payload STRING, cache_timestamp TIMESTAMP").asInstanceOf[StructType]
 }

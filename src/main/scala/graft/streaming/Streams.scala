@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.pipeline.Warehouse
+import graft.pipeline.{Pipeline, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -692,10 +692,7 @@ object Streams {
         if (!batch.isEmpty) {
           Warehouse.writeObservations(batch, obsPath)
           val all = Warehouse.readObservations(batch.sparkSession, obsPath)
-          Warehouse.refreshAggregate(Warehouse.dailyAggregates(all),
-            dailyPath, 60, "incremental")
-          Warehouse.refreshAggregate(Warehouse.monthlyAggregates(all),
-            monthlyPath, 60, "incremental")
+          Pipeline.publishRollup(all, Some((dailyPath, monthlyPath)), None)
         }
       }
       .start()

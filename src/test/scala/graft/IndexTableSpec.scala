@@ -217,7 +217,10 @@ class IndexTableSpec extends SparkSuite {
       Set("graft/Session.scala", "graft/Bench.scala")),
     ("no spark.graft.* conf key in the main sources: tuning is a code " +
       "constant, never a session setting",
-      "\"spark.graft.", Set.empty[String])
+      "\"spark.graft.", Set.empty[String]),
+    ("no graft.iterate.* system property in the main sources: an " +
+      "iterative operator's AQE scope is not switchable at run time",
+      "\"graft.iterate.", Set.empty[String])
   ).foreach { case (name, pattern, allowed) =>
     test(name) {
       def files(f: File): Seq[File] =

@@ -210,6 +210,99 @@ class PipelineSpec extends SparkSuite {
     assert(logged.forall(_._3.getMessage.contains("missing.json")))
   }
 
+  test("scheduler cache stage publishes the envelope when the api " +
+    "stage fails (§3.3)") {
+    val paths = Pipeline.Paths(tmpDir("weather_sched_cache"))
+    Pipeline.run(spark, s"$fixtureDir/batch1.json", paths)
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(paths.cache))
+    assert(Serving.readCacheIfFresh(spark, paths.cache, 3600).isEmpty)
+    val errors = Scheduler.runScheduled(spark,
+      s"$fixtureDir/missing.json", paths, ticks = 1)
+    assert(errors === 1) // the api stage; warehouse and cache succeed
+    val payload = Serving.readCacheIfFresh(spark, paths.cache, 3600)
+    assert(payload.exists(_.contains("\"monthly_data\"")))
+  }
+
+  test("a completed api stage is the tick's only rollup: the daily " +
+    "table is not rewritten after the cache") {
+    val paths = Pipeline.Paths(tmpDir("weather_sched_once"))
+    assert(Scheduler.runScheduled(spark,
+      s"$fixtureDir/batch1.json", paths, ticks = 1) === 0)
+    val loaded = spark.read.parquet(paths.dailyAgg)
+      .agg(max("warehouse_load_time")).head().getTimestamp(0)
+    val cached = spark.read.parquet(paths.cache)
+      .select("cache_timestamp").head().getTimestamp(0)
+    assert(!loaded.after(cached), s"daily loaded $loaded, cached $cached")
+  }
+
+  test("one run's tables and cached months equal an independent " +
+    "recompute from the observations") {
+    val paths = Pipeline.Paths(tmpDir("weather_rollup"))
+    Pipeline.run(spark, s"$fixtureDir/batch1.json", paths)
+    val obs = Warehouse.readObservations(spark, paths.observations)
+    // same keys, exact non-double values, doubles within 1e-9
+    def sameRows(got: Seq[Map[String, Any]], want: Seq[Map[String, Any]],
+        key: Seq[String]): Unit = {
+      def byKey(rs: Seq[Map[String, Any]]) =
+        rs.map(r => key.map(r(_)) -> r).toMap
+      val (g, w) = (byKey(got), byKey(want))
+      assert(g.size === got.size && g.keySet === w.keySet)
+      for ((k, wr) <- w; (c, wv) <- wr) (g(k)(c), wv) match {
+        case (a: Double, b: Double) =>
+          assert(math.abs(a - b) < 1e-9, s"$k $c: $a vs $b")
+        case (a, b) => assert(a === b, s"$k $c")
+      }
+    }
+    def maps(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      df.select(cols.map(col): _*).collect().toSeq
+        .map(r => cols.zip(r.toSeq).toMap)
+    val metrics = Seq("avg_temperature_c", "total_rainfall_mm",
+      "avg_humidity_percent", "max_temperature_c", "min_temperature_c",
+      "observation_count")
+    Seq(
+      (paths.dailyAgg, Warehouse.dailyAggregates(obs), Seq("date")),
+      (paths.monthlyAgg, Warehouse.monthlyAggregates(obs),
+        Seq("year", "month"))
+    ).foreach { case (path, want, key) =>
+      val table = spark.read.parquet(path)
+      val n = table.count()
+      assert(n > 0)
+      assert(table.select("rows_loaded").distinct().collect()
+        .map(_.getInt(0)).toSeq === Seq(n))
+      sameRows(maps(table, key ++ metrics), maps(want, key ++ metrics), key)
+    }
+    // the cached envelope's months, parsed back in the live rows' schema
+    val live = Serving.monthlyAverages(obs, 12)
+    val payload = Serving.readCacheIfFresh(spark, paths.cache, 3600).get
+    val months = spark.range(1).select(explode(from_json(lit(payload),
+      new org.apache.spark.sql.types.StructType().add("monthly_data",
+        org.apache.spark.sql.types.ArrayType(live.schema)))
+      .getField("monthly_data")).as("m")).select("m.*")
+    val cols = Seq("year", "month") ++ metrics
+    val (cached, want) = (maps(months, cols), maps(live, cols))
+    sameRows(cached, want, Seq("year", "month"))
+  }
+
+  test("observation and cache tables are written in their known schemas") {
+    val paths = Pipeline.Paths(tmpDir("weather_schemas"))
+    Pipeline.run(spark, s"$fixtureDir/batch1.json", paths)
+    def fields(t: org.apache.spark.sql.types.StructType) =
+      t.fields.toSeq.map(f => f.name -> f.dataType)
+    // one part file's footer, read without partition discovery
+    def footer(dir: String) = {
+      val part = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(_.toString.endsWith(".parquet")).findFirst().get
+      spark.read.parquet(part.toString).schema
+    }
+    assert(fields(footer(paths.observations)) :+
+      ("obs_date" -> org.apache.spark.sql.types.DateType) ===
+      fields(WeatherSchemas.observation))
+    assert(fields(spark.read.parquet(paths.observations).schema) ===
+      fields(WeatherSchemas.observation))
+    assert(fields(footer(paths.cache)) === fields(WeatherSchemas.cacheEntry))
+  }
+
   test("late-arriving batch lands in earlier days after recompute (ST4)") {
     val paths = Pipeline.Paths(tmpDir("weather_late"))
     Pipeline.run(spark, s"$fixtureDir/batch1.json", paths)

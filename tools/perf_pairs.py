@@ -11,9 +11,20 @@ median and quartiles and the fraction of pairs the change wins
 (lower is better; ties count for neither side). A run whose output
 checks fail is reported and left out of the summary. Each run's result
 object is appended to --out as one JSON line when given.
+
+Each end-to-end metric that the parent's BENCHMARK.json declares also
+gets a verdict, with its `bound` read from that file:
+  gain          the change wins at least 9/10 of the pairs and the
+                medians differ by more than the parent's IQR;
+  regressed     the change's median is worse than the parent's by more
+                than the bound (a fraction of the parent's median);
+  unresolved    neither, and the parent's IQR is wider than the bound,
+                unless every change run beats every parent run;
+  within bound  otherwise.
 """
 import argparse
 import json
+import os
 import statistics
 import subprocess
 import sys
@@ -45,6 +56,22 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def verdict(vals, par, chg, better, bound):
+    """The verdict on one end-to-end metric from its (parent, change)
+    pairs and each side's quartiles."""
+    sign = 1 if better == "lower" else -1
+    wins = sum(sign * (a - b) > 0 for a, b in vals)
+    iqr = par[2] - par[0]
+    if wins >= 0.9 * len(vals) and sign * (par[1] - chg[1]) > iqr:
+        return "gain"
+    if sign * (chg[1] - par[1]) > bound * abs(par[1]):
+        return "regressed"
+    every = all(sign * (a - b) > 0 for a, _ in vals for _, b in vals)
+    if iqr > bound * abs(par[1]) and not every:
+        return "unresolved"
+    return "within bound"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent")
@@ -55,6 +82,8 @@ def main():
     ap.add_argument("--trace", choices=["0", "1"], default="0")
     ap.add_argument("--out")
     args = ap.parse_args()
+    with open(os.path.join(args.parent, "BENCHMARK.json")) as fh:
+        end_to_end = {m["name"]: m for m in json.load(fh)["end_to_end"]}
     pairs = []
     for i, seed in enumerate(seeds_of(args.seeds)):
         sides = [("parent", args.parent), ("change", args.change)]
@@ -78,10 +107,13 @@ def main():
             continue
         par, chg = quartiles([a for a, _ in vals]), quartiles([b for _, b in vals])
         wins = sum(b < a for a, b in vals)
+        m = end_to_end.get(name)
+        judged = (f": {verdict(vals, par, chg, m['better'], m['bound'])}"
+                  f" (bound {m['bound']})" if m else "")
         print(f"{name}: parent {par[1]:.4g} [{par[0]:.4g}, {par[2]:.4g}] "
               f"change {chg[1]:.4g} [{chg[0]:.4g}, {chg[2]:.4g}] "
               f"({(chg[1] - par[1]) / par[1] if par[1] else 0:+.1%}), change wins "
-              f"{wins}/{len(vals)}, parent IQR {par[2] - par[0]:.4g}")
+              f"{wins}/{len(vals)}, parent IQR {par[2] - par[0]:.4g}{judged}")
 
 
 if __name__ == "__main__":
